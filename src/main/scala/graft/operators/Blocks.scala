@@ -21,12 +21,17 @@ object Blocks {
   /** Release the block storage behind a `localCheckpoint`ed frame. The
     * frame must NEVER be read again: the checkpoint truncated its
     * lineage, so a later action would have nothing to rebuild from and
-    * would fail with missing blocks. No-op for frames that are not a
-    * checkpoint leaf. Non-blocking (the executor frees asynchronously —
-    * the point is eligibility for eviction accounting, not synchronous
-    * reclamation). */
+    * would fail with missing blocks. A frame whose plan is not the
+    * checkpoint leaf itself (a projection or filter OVER a checkpoint, a
+    * plain scan) is refused loudly: silently releasing nothing would let
+    * the loop keep accumulating blocks. Non-blocking (the executor frees
+    * asynchronously — the point is eligibility for eviction accounting,
+    * not synchronous reclamation). */
   def drop(df: DataFrame): Unit = df.queryExecution.logical match {
     case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-    case _ => ()
+    case other => throw new IllegalArgumentException(
+      s"Blocks.drop: expected a localCheckpoint leaf (LogicalRDD), found " +
+        s"${other.nodeName} — pass the checkpointed frame itself, not a " +
+        "frame derived from it")
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
 import graft.functions.BloomUtil
 
@@ -261,17 +262,21 @@ object TableFormat {
     * When `spec` names the table's partition layout, the same aggregate
     * also derives each file's PARTITION TUPLE (per-term min/max of the
     * routing value — min==max and null-free proves purity) recorded as
-    * [[FileStat.part]]; a mixed or null-holding file records None. */
+    * [[FileStat.part]]; a mixed or null-holding file records None.
+    * `data` is the caller's own read of exactly `files` when it has one
+    * (its schema is then not inferred a second time). */
   def fileStats(spark: SparkSession, files: Seq[String], keyCol: String,
                 numBits: Int, numHashes: Int,
                 zoneCols: Seq[String] = Seq.empty,
                 spec: Option[String] = None,
-                bloomCols: Seq[String] = Seq.empty): Seq[FileStat] = {
+                bloomCols: Seq[String] = Seq.empty,
+                data: Option[DataFrame] = None): Seq[FileStat] = {
     require(files.nonEmpty, "fileStats: empty file list")
     require(bloomCols.forall(zoneCols.contains),
       s"fileStats: bloom.cols must name declared zone columns " +
         s"(got ${bloomCols.mkString(",")}; zones ${zoneCols.mkString(",")})")
-    val schema = spark.read.parquet(files: _*).schema
+    val df = data.getOrElse(spark.read.parquet(files: _*))
+    val schema = df.schema
     def zl(c: String) = zoneLong(schema(c).dataType, col(c))
     // secondary blooms hash the ZONE-LONG image's base-10 string — the
     // exact space pushed-filter probes translate values into
@@ -308,8 +313,7 @@ object TableFormat {
       graft.Functions.bloom_agg(col(keyCol), numBits, numHashes).as("bloom")) ++
       zoneAggs ++ partAggs ++ bloomAggs :+
       graft.Functions.kmv_sketch(col(keyCol).cast("string"), KmvStatsK).as("kmv")
-    spark.read.parquet(files: _*)
-      .groupBy(input_file_name().as("file"))
+    df.groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
       .map { r =>
@@ -496,17 +500,22 @@ object TableFormat {
     bm
   }
 
-  /** Read files RAW with each row's FILE-ABSOLUTE ORDINAL (`__pos`, the
-    * native reader's `_metadata.row_index`) and source path (`__file`,
-    * `_metadata.file_path` — the reader's URI rendering; compare in
-    * URI-path form). Era-mapped like [[readRaw]]; no masks applied —
-    * the positional-delete writer and the changelog's DV diff both
-    * anchor on raw ordinals. */
-  private def readWithPos(spark: SparkSession, snap: Snapshot,
-                          files: Seq[String],
-                          withIdCol: Boolean = false): DataFrame = {
-    val metaCols = Seq(col("_metadata.file_path").as("__file"),
-      col("_metadata.row_index").as("__pos"))
+  /** Read files RAW — no masks applied — under the snapshot's own
+    * SCHEMA when the commit carries one (by-name resolution: files
+    * written before a column existed read it as NULL or its initial
+    * default). A column-mapped table reads one group per rename ERA
+    * under that era's physical names, renamed back positionally —
+    * rewrites (compact/recluster) then WRITE the current names, so
+    * maintenance naturally migrates files out of old eras. `withPos`
+    * prepends each row's source path (`__file`, `_metadata.file_path` —
+    * the reader's URI rendering; compare in URI-path form) and
+    * FILE-ABSOLUTE ORDINAL (`__pos`, `_metadata.row_index`): the
+    * positional-delete writer, the masked scan and the changelog's DV
+    * diff all anchor on raw ordinals. `withIdCol` appends the
+    * materialized id column [[IdColName]]. */
+  private def scanFiles(spark: SparkSession, snap: Snapshot,
+                        files: Seq[String], withPos: Boolean,
+                        withIdCol: Boolean = false): DataFrame = {
     // the materialized id column reads by name (null-filled when the
     // file predates it) and is NEVER era-mapped (synth-adjacent name)
     def plusId(s: org.apache.spark.sql.types.StructType) =
@@ -514,24 +523,32 @@ object TableFormat {
       else org.apache.spark.sql.types.StructType(s.fields :+
         org.apache.spark.sql.types.StructField(IdColName,
           org.apache.spark.sql.types.LongType))
+    def named(df: DataFrame, names: Seq[String]): DataFrame =
+      if (withPos)
+        df.select(col("_metadata.file_path") +: col("_metadata.row_index") +:
+            df.columns.toSeq.map(col): _*)
+          .toDF("__file" +: "__pos" +: names: _*)
+      else if (df.columns.toSeq == names) df
+      else df.toDF(names: _*)
     snap.schemaDdl match {
       case Some(ddl) =>
         // default metadata rides the read schema: a maintenance rewrite
         // of a pre-born file must MATERIALIZE the initial default, not
-        // NULL (withDefaultMetadata is declared below readRaw)
+        // NULL (withDefaultMetadata is declared below)
         val schema = withDefaultMetadata(
           org.apache.spark.sql.types.StructType.fromDDL(ddl), snap.props)
-        val seqOf = snap.files.map(f => f.file -> f.seq).toMap
-        files.groupBy(f => physicalSchemaOf(snap.props, schema,
-            seqOf.getOrElse(f, Long.MaxValue)))
-          .toSeq.sortBy(_._2.head)
-          .map { case (phys, group) =>
-            val read = plusId(phys)
-            spark.read.schema(read).parquet(group: _*)
-              .select(metaCols ++ read.fieldNames.map(col): _*)
-              .toDF("__file" +: "__pos" +: plusId(schema).fieldNames.toSeq: _*)
+        val eras =
+          if (!hasColumnMapping(snap.props)) Seq(schema -> files)
+          else {
+            val seqOf = snap.files.map(f => f.file -> f.seq).toMap
+            files.groupBy(f => physicalSchemaOf(snap.props, schema,
+                seqOf.getOrElse(f, Long.MaxValue)))
+              .toSeq.sortBy(_._2.head)
           }
-          .reduce(_.unionByName(_))
+        eras.map { case (phys, group) =>
+          named(spark.read.schema(plusId(phys)).parquet(group: _*),
+            plusId(schema).fieldNames.toSeq)
+        }.reduce(_.unionByName(_))
       case None =>
         val df =
           if (!withIdCol) spark.read.parquet(files: _*)
@@ -541,31 +558,8 @@ object TableFormat {
               if (base.fieldNames.contains(IdColName)) base else plusId(base)
             spark.read.schema(s).parquet(files: _*)
           }
-        df.select(metaCols ++ df.columns.map(col): _*)
+        named(df, df.columns.toSeq)
     }
-  }
-
-  /** Apply a file subset's DELETION VECTORS: per DV'd file, anti-join
-    * the rows' ordinals against the sidecar's exploded positions
-    * (O(deleted rows) — AQE broadcasts it). Per-file reads keep the
-    * join key a plain long ordinal — no path-rendering comparison, no
-    * UDF — and DV'd files are FEW by design (positional deletes target
-    * scattered small deletes; range deletes belong to [[deleteWhere]]). */
-  private def applyDvs(spark: SparkSession, snap: Snapshot,
-                       dvd: Seq[FileStat]): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    dvd.map { f =>
-      val bm = readDv(conf, f.dv.get._1)
-      val b = Seq.newBuilder[Long]
-      bm.forEach(new org.roaringbitmap.longlong.LongConsumer {
-        override def accept(v: Long): Unit = b += v
-      })
-      val posDf = spark.createDataset(b.result())(
-        org.apache.spark.sql.Encoders.scalaLong).toDF("__dvpos")
-      readWithPos(spark, snap, Seq(f.file))
-        .join(posDf, col("__pos") === col("__dvpos"), "left_anti")
-        .drop("__file", "__pos")
-    }.reduce(_.unionByName(_))
   }
 
   // ---- commit protocol ---------------------------------------------------
@@ -1268,149 +1262,141 @@ object TableFormat {
     })
   }
 
-  private def readRaw(spark: SparkSession, snap: Snapshot,
-                      files: Seq[String]): DataFrame =
-    snap.schemaDdl match {
-      case Some(ddl) =>
-        val schema = withDefaultMetadata(
-          org.apache.spark.sql.types.StructType.fromDDL(ddl), snap.props)
-        if (!hasColumnMapping(snap.props))
-          spark.read.schema(schema).parquet(files: _*)
-        else {
-          // mapping-aware read: group files by their ERA's physical
-          // schema (one group per rename boundary, a handful at most),
-          // read each group under physical names, rename back
-          // positionally — rewrites (compact/recluster) then WRITE the
-          // current names, so maintenance naturally migrates files out
-          // of old eras
-          val seqOf = snap.files.map(f => f.file -> f.seq).toMap
-          files.groupBy(f => physicalSchemaOf(snap.props, schema,
-              seqOf.getOrElse(f, Long.MaxValue)))
-            .toSeq.sortBy(_._2.head)
-            .map { case (phys, group) =>
-              spark.read.schema(phys).parquet(group: _*)
-                .toDF(schema.fieldNames: _*)
-            }
-            .reduce(_.unionByName(_))
-        }
-      case None => spark.read.parquet(files: _*)
-    }
-
-  /** Read an explicit file subset of `snap` with its merge-on-read delete
-    * manifests APPLIED — every reader goes through here, so MoR deletes
-    * are invisible to scans, changelogs, merges and compaction alike. A
-    * manifest applies only to data files with a strictly smaller `seq`
-    * (the Iceberg sequence-number rule): files are grouped by seq — at
-    * most one group per commit, and compaction collapses them back to
-    * one — and each group anti-joins the union of its applicable
-    * manifests (one equi-join; AQE broadcasts small manifests). */
-  private def readFiles(spark: SparkSession, snap: Snapshot,
-                        files: Seq[String]): DataFrame = {
-    // DELETION VECTORS apply per file (position masks bind to exact
-    // files); equality manifests then scope by seq over both branches.
-    // The common all-clean case stays the single readRaw of before.
-    val statOf = snap.files.map(f => f.file -> f).toMap
-    def readMasked(group: Seq[String]): DataFrame = {
-      val (gDvd, gClean) =
-        group.partition(f => statOf.get(f).exists(_.dv.isDefined))
-      Seq(
-        if (gClean.nonEmpty) Some(readRaw(spark, snap, gClean)) else None,
-        if (gDvd.nonEmpty) Some(applyDvs(spark, snap, gDvd.map(statOf)))
-        else None).flatten.reduce(_.unionByName(_))
-    }
-    if (snap.deletes.isEmpty) readMasked(files)
-    else {
-      val seqOf = snap.files.map(f => f.file -> f.seq).toMap
-      files.groupBy(f => seqOf.getOrElse(f, 0L)).toSeq.sortBy(_._1)
-        .map { case (fseq, group) =>
-          val manifests = snap.deletes.filter(_.seq > fseq).map(_.file)
-          val df = readMasked(group)
-          if (manifests.isEmpty) df
-          else df.join(
-            spark.read.parquet(manifests: _*).select(col("_del_key")).distinct(),
-            col(snap.keyCol).cast("long") === col("_del_key"), "left_anti")
-        }
-        .reduce(_.unionByName(_))
-    }
-  }
-
-  /** Masked read of `files` carrying each row's `_row_id` in the
+  /** Read an explicit file subset of `snap` with its merge-on-read masks
+    * APPLIED — every library reader goes through here, so deletion
+    * vectors and delete manifests are invisible to scans, changelogs,
+    * merges and compaction alike. With nothing to mask (no DV'd file in
+    * the subset, no manifest newer than any of its files) and no ids
+    * asked for, this is the plain [[scanFiles]]; otherwise the
+    * [[maskedScan]]. `withIds` adds each row's `_row_id` in the
     * [[IdColName]] column — the LINEAGE-PRESERVING rewrite input: a
-    * maintenance rewrite that reads through this and writes the column
-    * keeps every surviving row's id across the rewrite (the Iceberg v3
-    * row-lineage materialization rule). Per file: ids resolve as the
-    * materialized column value, falling back to `rid + ordinal` when a
-    * range is assigned (null = no lineage — pre-lineage files read a
-    * null id, stated not guessed); deletion vectors mask by ordinal and
-    * equality manifests by key, exactly like [[readFiles]]. */
-  private def readWithRowIds(spark: SparkSession, snap: Snapshot,
-                             files: Seq[String]): DataFrame = {
-    def uriPath(s: String) = uriPathOf(s)
-    val statOf = snap.files.map(f => uriPath(f.file) -> f).toMap
-    // DV'd files read individually (positional anti-join per exact
-    // file — FEW by design); everything else reads in seq-grouped BULK
-    // scans: the per-file `rid` joins in as a broadcast lookup keyed on
-    // the URI-path form of `_metadata.file_path`, NORMALIZED BY THE SAME
-    // `uriPath` function as the lookup side (the deletePositions
-    // convention — a regexp strip of the reader's rendering left the
-    // percent-encoding intact and silently dropped rows on any space/
-    // non-ASCII warehouse path), so a whole-table maintenance rewrite
-    // costs ONE scan + a broadcast hash join, not a union of per-file
-    // plans. The join is LEFT + fail-fast: an unresolved path raises at
-    // execution time instead of committing a truncated op=replace.
-    val dfPath = udf(uriPathOf _).apply(col("__file"))
-    def resolveIds(df: DataFrame, members: Seq[FileStat]): DataFrame = {
-      val lookup = spark.createDataFrame(
-          members.map(f => (uriPath(f.file), f.rid)))
-        .toDF("__lf", "__rid")
-      df.join(broadcast(lookup), dfPath === col("__lf"), "left")
-        .withColumn(IdColName,
-          when(col("__rid").isNull, raise_error(concat(
-            lit("readWithRowIds: file path did not resolve against the " +
-              "snapshot's rid lookup (path-form mismatch?): "),
-            col("__file"))).cast("long"))
-          .otherwise(coalesce(col(IdColName),
-            when(col("__rid") >= 0, col("__rid") + col("__pos")))))
-        .drop("__lf", "__rid")
-    }
-    def maskManifests(df: DataFrame, fseq: Long): DataFrame = {
-      val manifests = snap.deletes.filter(_.seq > fseq).map(_.file)
-      if (manifests.isEmpty) df
-      else df.join(
-        spark.read.parquet(manifests: _*).select(col("_del_key")).distinct(),
-        col(snap.keyCol).cast("long") === col("_del_key"), "left_anti")
-    }
-    val stats = files.map(fl => statOf(uriPath(fl)))
-    val (dvd, plain) = stats.partition(_.dv.isDefined)
-    val bulk = plain.groupBy(_.seq).toSeq.sortBy(_._1).map {
-      case (fseq, members) =>
-        maskManifests(
-          resolveIds(readWithPos(spark, snap, members.map(_.file),
-            withIdCol = true), members), fseq)
-    }
-    val perFile = dvd.map { st =>
-      var df = resolveIds(
-        readWithPos(spark, snap, Seq(st.file), withIdCol = true), Seq(st))
-      val bm = readDv(spark.sparkContext.hadoopConfiguration, st.dv.get._1)
-      val b = Seq.newBuilder[Long]
-      bm.forEach(new org.roaringbitmap.longlong.LongConsumer {
-        override def accept(v: Long): Unit = b += v
-      })
-      val posDf = spark.createDataset(b.result())(
-        org.apache.spark.sql.Encoders.scalaLong).toDF("__dvpos")
-      df = df.join(posDf, col("__pos") === col("__dvpos"), "left_anti")
-      maskManifests(df, st.seq)
-    }
-    (bulk ++ perFile).reduce(_.unionByName(_)).drop("__file", "__pos")
+    * maintenance rewrite that reads through it and writes the column
+    * keeps every surviving row's id (the Iceberg v3 row-lineage
+    * materialization rule). */
+  private def readFiles(spark: SparkSession, snap: Snapshot,
+                        files: Seq[String],
+                        withIds: Boolean = false): DataFrame = {
+    val statOf = snap.files.map(f => uriPathOf(f.file) -> f).toMap
+    val stats = files.map(f => statOf.getOrElse(uriPathOf(f),
+      throw new IllegalArgumentException(
+        s"readFiles: $f is not a file of snapshot v${snap.version}")))
+    if (withIds || stats.exists(_.dv.isDefined) ||
+        manifestsFor(snap, stats).nonEmpty)
+      maskedScan(spark, snap, stats, withIds)
+    else scanFiles(spark, snap, files, withPos = false)
   }
 
-  /** Public face of [[readWithRowIds]] for the SQL layer's
-    * copy-on-write lineage re-attachment ([[graft.sources.v2]]): masked
+  /** The delete manifests that mask at least one of `stats` — those with
+    * a seq above some file's seq (the Iceberg sequence-number rule). */
+  private def manifestsFor(snap: Snapshot,
+                           stats: Seq[FileStat]): Seq[DeleteFile] =
+    if (stats.isEmpty) Seq.empty
+    else {
+      val lowest = stats.map(_.seq).min
+      snap.deletes.filter(_.seq > lowest)
+    }
+
+  /** The MASKED SCAN — a plan whose size does not grow with the number
+    * of commits or DV'd files:
+    *  - ONE scan of every file ([[scanFiles]]; column-mapped tables add
+    *    one scan per rename era) with each row's path and ordinal;
+    *  - ONE broadcast lookup from the path to the file's index, `rid` and
+    *    `seq` ([[resolvePaths]] — fails loud on an unresolved path);
+    *  - ONE deletion-vector anti-join keyed on (file index, ordinal),
+    *    built from the bitmaps of all DV'd files (O(deleted rows));
+    *  - ONE manifest anti-join: the applicable manifests read once under
+    *    their declared `_del_key BIGINT` schema (no inference job),
+    *    aggregated to (key, max manifest seq); a row of file seq `s` is
+    *    dropped when `s < max seq`. That is exactly the sequence-number
+    *    rule: some manifest with seq > s holds key k iff the largest seq
+    *    among the manifests holding k is > s. A NULL key never matches.
+    * `only` (aligned with `stats`) replaces the DV anti-join by a
+    * semi-join that KEEPS just those ordinals — the changelog reading
+    * back the rows a grown vector newly masks. With `withIds`, rows
+    * carry `_row_id` in [[IdColName]]: the materialized column value,
+    * else `rid + ordinal` when a range is assigned, else null (no
+    * lineage — stated, not guessed). */
+  private def maskedScan(spark: SparkSession, snap: Snapshot,
+                         stats: Seq[FileStat], withIds: Boolean,
+                         only: Option[Seq[Roaring64Bitmap]] = None)
+      : DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    var df = resolvePaths(spark,
+      scanFiles(spark, snap, stats.map(_.file), withPos = true,
+        withIdCol = withIds),
+      stats.zipWithIndex.map { case (f, i) => (f.file, i, f.rid, f.seq) })
+    val bitmaps = only.getOrElse(stats.map(
+      _.dv.fold(new Roaring64Bitmap())(d => readDv(conf, d._1))))
+    val positions = bitmaps.zipWithIndex.flatMap { case (bm, i) =>
+      bm.toArray.toSeq.map(p => (i, p)) }
+    if (positions.nonEmpty || only.isDefined)
+      df = df.join(spark.createDataFrame(positions).toDF("__dfid", "__dpos"),
+        col("__fid") === col("__dfid") && col("__pos") === col("__dpos"),
+        if (only.isDefined) "left_semi" else "left_anti")
+    val manifests = manifestsFor(snap, stats)
+    if (manifests.nonEmpty) {
+      val masks = resolvePaths(spark,
+          spark.read.schema(DelKeySchema).parquet(manifests.map(_.file): _*)
+            .select(col("_metadata.file_path").as("__file"), col("_del_key")),
+          manifests.zipWithIndex.map { case (d, i) => (d.file, i, -1L, d.seq) })
+        .groupBy(col("_del_key").as("__mkey"))
+        .agg(max(col("__fseq")).as("__mseq"))
+      df = df
+        .join(masks, col(snap.keyCol).cast("long") === col("__mkey"), "left")
+        .filter(col("__mseq").isNull || col("__fseq") >= col("__mseq"))
+    }
+    if (withIds) df = df.withColumn(IdColName, coalesce(col(IdColName),
+      when(col("__rid") >= 0, col("__rid") + col("__pos"))))
+    df.drop("__file", "__pos", "__lf", "__fid", "__rid", "__fseq", "__mkey",
+      "__mseq")
+  }
+
+  /** Declared schema of a delete manifest — read under it, never inferred. */
+  private val DelKeySchema = "_del_key BIGINT"
+
+  /** Tag each row of a scan (`__file` = `_metadata.file_path`, the
+    * reader's URL-encoded rendering) with its file's (`__fid`, `__rid`,
+    * `__fseq`) from `entries` (path, index, rid, seq): a LEFT broadcast
+    * join on the URI-path form, NORMALIZED BY THE SAME [[uriPathOf]] on
+    * both sides (a regexp strip of the rendering once left the
+    * percent-encoding intact and silently dropped rows on any space/
+    * non-ASCII warehouse path). Fail-fast: an unresolved path raises at
+    * execution time instead of committing a truncated rewrite. */
+  private def resolvePaths(spark: SparkSession, df: DataFrame,
+                           entries: Seq[(String, Int, Long, Long)]): DataFrame = {
+    val lookup = spark.createDataFrame(entries.map { case (f, i, rid, seq) =>
+        (uriPathOf(f), i, rid, seq) })
+      .toDF("__lf", "__fid", "__rid", "__fseq")
+    df.join(broadcast(lookup),
+        udf(new UriPathMemo).apply(col("__file")) === col("__lf"), "left")
+      .filter(when(col("__lf").isNull, raise_error(concat(
+        lit("maskedScan: file path did not resolve against the snapshot " +
+          "lookup (path-form mismatch?): "), col("__file"))))
+        .otherwise(lit(true)))
+  }
+
+  /** [[uriPathOf]] over a column of reader renderings, remembering the
+    * last answer: a scan task's rows arrive grouped by file, so the
+    * Hadoop path parse runs about once per file instead of once per row.
+    * The remembered pair is one immutable value, so a racing reader sees
+    * a consistent (input, output) or none. */
+  private final class UriPathMemo extends (String => String) with Serializable {
+    @transient private var last: (String, String) = _
+    def apply(s: String): String = {
+      val l = last
+      if (l != null && l._1 == s) l._2
+      else { val out = uriPathOf(s); last = (s, out); out }
+    }
+  }
+
+  /** Public face of the lineage read ([[readFiles]] `withIds`) for the
+    * SQL layer's copy-on-write lineage re-attachment
+    * ([[graft.sources.v2]]): masked
     * read of `files` with each row's lineage id exposed as
     * [[IdColName]] (null = pre-lineage row, stated not guessed). */
   def readFilesWithLineage(spark: SparkSession, snap: Snapshot,
                            files: Seq[String]): DataFrame =
-    readWithRowIds(spark, snap, files)
+    readFiles(spark, snap, files, withIds = true)
 
   /** True when a lineage-preserving rewrite of `files` is worthwhile:
     * at least one of them carries an id range or a materialized id
@@ -1918,26 +1904,22 @@ object TableFormat {
                      extraProps: Map[String, String] = Map.empty,
                      filesSorted: Boolean = false): Snapshot = {
     val first = snapshot(spark, root)
-    val stats0 =
-      if (files.isEmpty) Seq.empty
-      else fileStats(spark, files, first.keyCol, first.numBits,
+    val batch = if (files.isEmpty) None else Some(spark.read.parquet(files: _*))
+    val stats0 = batch.fold(Seq.empty[FileStat])(b =>
+      fileStats(spark, files, first.keyCol, first.numBits,
         first.numHashes, first.zoneCols,
         spec = first.props.get(PartitionSpecProp),
-        bloomCols = bloomColsOf(first.props))
+        bloomCols = bloomColsOf(first.props), data = Some(b)))
     val stats =
       if (filesSorted) stats0.map(_.copy(sorted = true)) else stats0
-    if (files.nonEmpty)
-      checkConstraints(spark, first, spark.read.parquet(files: _*),
-        "overwriteFiles")
-    val newSchema =
-      if (files.isEmpty) None else Some(spark.read.parquet(files: _*).schema)
+    batch.foreach(checkConstraints(spark, first, _, "overwriteFiles"))
+    val newSchema = batch.map(_.schema)
     commitTransform(spark, root, first.keyCol, first.numBits, first.numHashes,
       { curOpt =>
         val cur = curOpt.getOrElse(
           throw new IllegalStateException("overwriteFiles: nothing committed"))
-        if (files.nonEmpty)
-          recheckConstraintsIfChanged(spark, first, cur,
-            spark.read.parquet(files: _*), "overwriteFiles")
+        batch.foreach(
+          recheckConstraintsIfChanged(spark, first, cur, _, "overwriteFiles"))
         stats.sortBy(_.file)
       },
       deriveProps = curOpt =>
@@ -1959,20 +1941,22 @@ object TableFormat {
                   propCas: Map[String, (Option[String], String)] = Map.empty)
       : Snapshot = {
     val first = snapshot(spark, root)
+    // ONE read of the new files (one schema inference) serves the stats,
+    // the schema evolution and both constraint checks
+    val batch = spark.read.parquet(files: _*)
     val stats0 = fileStats(spark, files, first.keyCol, first.numBits,
       first.numHashes, first.zoneCols,
       spec = first.props.get(PartitionSpecProp),
-        bloomCols = bloomColsOf(first.props))
+        bloomCols = bloomColsOf(first.props), data = Some(batch))
     val stats =
       if (filesSorted) stats0.map(_.copy(sorted = true)) else stats0
-    val newSchema = spark.read.parquet(files: _*).schema
-    checkConstraints(spark, first, spark.read.parquet(files: _*), "appendFiles")
+    val newSchema = batch.schema
+    checkConstraints(spark, first, batch, "appendFiles")
     commitTransform(spark, root, first.keyCol, first.numBits, first.numHashes,
       { curOpt =>
         val cur = curOpt.getOrElse(
           throw new IllegalStateException("appendFiles: nothing committed"))
-        recheckConstraintsIfChanged(spark, first, cur,
-          spark.read.parquet(files: _*), "appendFiles")
+        recheckConstraintsIfChanged(spark, first, cur, batch, "appendFiles")
         (cur.files ++ stats).sortBy(_.file)
       },
       deriveProps = { curOpt =>
@@ -2208,8 +2192,7 @@ object TableFormat {
           val terms = parseSpec(spec)
           val lineage = anyLineage(stale)
           val df0 =
-            if (lineage) readWithRowIds(spark, cur, stale.map(_.file))
-            else readFiles(spark, cur, stale.map(_.file))
+            readFiles(spark, cur, stale.map(_.file), withIds = lineage)
           val declaredOrder = sortOrderColsOf(cur.props)
           val monoBases = terms.filterNot(_.isInstanceOf[BucketTerm])
             .map(_.baseCol)
@@ -2417,14 +2400,18 @@ object TableFormat {
       // Lineage-preserving: rows carry their _row_id through the
       // rewrite in the materialized id column.
       val lineage = anyLineage(cur.files) && cur.files.nonEmpty
-      (if (lineage) readWithRowIds(spark, cur, cur.files.map(_.file))
-       else read(spark, cur))
-        .repartitionByRange(nFiles, col(cur.keyCol))
-        .write.mode("overwrite").parquet(out)
+      val rewrite =
+        (if (lineage) readFilesWithLineage(spark, cur, cur.files.map(_.file))
+         else read(spark, cur))
+          .repartitionByRange(nFiles, col(cur.keyCol))
+      rewrite.write.mode("overwrite").parquet(out)
       val files = listParquet(spark, out)
+      // the output's schema is the rewrite's: stats read it back under
+      // that schema, with no inference job
       fileStats(spark, files, cur.keyCol, cur.numBits, cur.numHashes,
         cur.zoneCols, spec = cur.props.get(PartitionSpecProp),
-              bloomCols = bloomColsOf(cur.props))
+        bloomCols = bloomColsOf(cur.props),
+        data = Some(spark.read.schema(rewrite.schema).parquet(files: _*)))
         .map(s => if (lineage) s.copy(ridCol = true) else s)
     }, op = Some("replace"),
       // the rewrite read MoR manifests through read() above, so the
@@ -2458,8 +2445,7 @@ object TableFormat {
           // rewritten files keep their _row_id through the materialized
           // id column — only the deleted rows' ids retire
           val lineage = anyLineage(hit)
-          (if (lineage) readWithRowIds(spark, cur, hit.map(_.file))
-           else readFiles(spark, cur, hit.map(_.file)))
+          readFiles(spark, cur, hit.map(_.file), withIds = lineage)
             // coalesce(_, true): a NULL key is not in any delete set, but
             // !IN(...) evaluates NULL for it — keep null-key rows
             .filter(coalesce(
@@ -2502,7 +2488,7 @@ object TableFormat {
         val cur = curOpt.getOrElse(throw new IllegalStateException(
           "rewriteClustered: nothing committed"))
         val lineage = cur.files.nonEmpty && anyLineage(cur.files)
-        (if (lineage) readWithRowIds(spark, cur, cur.files.map(_.file))
+        (if (lineage) readFilesWithLineage(spark, cur, cur.files.map(_.file))
          else read(spark, cur))
           .withColumn("_g", groupExpr)
           .repartition(col("_g"))
@@ -2629,8 +2615,8 @@ object TableFormat {
               else if (tuple.isDefined) baseCols
               else Seq.empty
             val lineage = anyLineage(bin)
-            val df0 = (if (lineage) readWithRowIds(spark, cur, bin.map(_.file))
-                       else readFiles(spark, cur, bin.map(_.file))).coalesce(1)
+            val df0 = readFiles(spark, cur, bin.map(_.file), withIds = lineage)
+              .coalesce(1)
             val df = if (sortCols.isEmpty) df0
               else df0.sortWithinPartitions(sortCols.map(col): _*)
             df.write.mode("overwrite").parquet(out)
@@ -2989,7 +2975,8 @@ object TableFormat {
     if (first.files.isEmpty) return (first, 0L, 0)
     def uriPath(s: String) = uriPathOf(s)
     // per-file distributed bitmap build: one blob + count per file
-    val matched = readWithPos(spark, first, first.files.map(_.file))
+    val matched = scanFiles(spark, first, first.files.map(_.file),
+      withPos = true)
       .filter(predicate)
       .groupBy(col("__file"))
       .agg(graft.Functions.roaring_agg(col("__pos")).as("__dv"),
@@ -3139,8 +3126,8 @@ object TableFormat {
     * reference — O(keys) IO total, no data rewrite at all. This is the
     * 100 TB posture for large or scattered delete sets where
     * [[deleteKeys]]' copy-on-write would rewrite most of the table:
-    * readers apply the manifest as one anti-join per file-seq group
-    * ([[readFiles]]), a key APPENDED after the delete is visible again
+    * readers apply every manifest in one seq-aware anti-join
+    * ([[maskedScan]]), a key APPENDED after the delete is visible again
     * (manifests scope to strictly-older files via sequence numbers), and
     * [[compact]] materializes the deletes and clears the manifests — the
     * read-amplification ⇄ write-amplification dial every v2 table tunes.
@@ -3208,8 +3195,9 @@ object TableFormat {
     * of its keys and never itself. Upserting the same key again later
     * replaces it the same way (the older upsert file gets masked).
     * The ANSI duplicate-source-key cardinality rule applies as in
-    * [[mergeRows]]. Reads pay one anti-join per file-seq group until
-    * [[compact]] materializes — the merge-on-read dial. */
+    * [[mergeRows]]. Reads pay the seq-aware manifest anti-join
+    * ([[maskedScan]]) until [[compact]] materializes — the merge-on-read
+    * dial. */
   def upsertRowsMoR(spark: SparkSession, root: String, dataDir: String,
                     source: DataFrame, nOutFiles: Int = 1,
                     extraProps: Map[String, String] = Map.empty): Snapshot = {
@@ -3266,7 +3254,8 @@ object TableFormat {
   /** MANIFEST compaction — Iceberg's rewrite-manifests for the delete
     * chain: merge delete manifests into fewer files WITHOUT touching any
     * data file, so a long run of streaming MoR commits stops costing one
-    * anti-join each. Soundness is a pure seq argument: a group of
+    * more manifest file per masked read. Soundness is a pure seq
+    * argument: a group of
     * manifests with seqs S merged at seq max(S) applies to exactly the
     * same files iff NO live data file's seq falls in [min(S), max(S)) —
     * greedy grouping over the sorted manifest seqs against the file-seq
@@ -3398,8 +3387,8 @@ object TableFormat {
             val sortCols = if (declaredOrder.nonEmpty) declaredOrder
               else baseCols
             val lineage = anyLineage(Seq(f))
-            val df0 = (if (lineage) readWithRowIds(spark, cur, Seq(f.file))
-                       else readFiles(spark, cur, Seq(f.file))).coalesce(1)
+            val df0 = readFiles(spark, cur, Seq(f.file), withIds = lineage)
+              .coalesce(1)
             (if (sortCols.isEmpty) df0
              else df0.sortWithinPartitions(sortCols.map(col): _*))
               .write.mode("overwrite").parquet(out)
@@ -3419,8 +3408,7 @@ object TableFormat {
             val out = s"$dataDir/matdel-${java.util.UUID.randomUUID().toString}"
             val lineage = anyLineage(affected)
             val masked =
-              if (lineage) readWithRowIds(spark, cur, affected.map(_.file))
-              else readFiles(spark, cur, affected.map(_.file))
+              readFiles(spark, cur, affected.map(_.file), withIds = lineage)
             (if (nOutFiles > 0) masked.repartition(nOutFiles) else masked)
               .write.mode("overwrite").parquet(out)
             val files = listParquet(spark, out)
@@ -3526,7 +3514,7 @@ object TableFormat {
               .select(tableCols.map(col): _*)
               .unionByName(src)
           else {
-            val withIds = readWithRowIds(spark, cur, hit.map(_.file))
+            val withIds = readFilesWithLineage(spark, cur, hit.map(_.file))
             val outCols = (tableCols :+ IdColName).map(col)
             val survivors = withIds
               .join(srcKeys, Seq(cur.keyCol), "leftanti")
@@ -3948,8 +3936,8 @@ object TableFormat {
         val masked: Option[DataFrame] =
           if (newManifests.isEmpty) None
           else {
-            val keys = spark.read.parquet(newManifests: _*)
-              .select(col("_del_key")).distinct()
+            val keys = spark.read.schema(DelKeySchema).parquet(newManifests: _*)
+              .distinct()
             val rng = keys.agg(min(col("_del_key")), max(col("_del_key")))
               .collect()(0)
             if (rng.isNullAt(0)) None
@@ -4004,42 +3992,30 @@ object TableFormat {
             cur.files.filter(f => added.contains(f.file)))
             .forall(f => f.rid >= 0 || f.ridCol)
         val RID = "_row_id"
-        def grownRows(withIds: Boolean): Seq[DataFrame] = grownStats.map { f =>
-          val pf = prevByFile(f.file)
-          val bm = readDv(conf, f.dv.get._1)
-          pf.dv.foreach(d => bm.andNot(readDv(conf, d._1)))
-          val b = Seq.newBuilder[Long]
-          bm.forEach(new org.roaringbitmap.longlong.LongConsumer {
-            override def accept(v: Long): Unit = b += v
-          })
-          val posDf = spark.createDataset(b.result())(
-            org.apache.spark.sql.Encoders.scalaLong).toDF("__dvpos")
-          val raw = readWithPos(spark, snapFor, Seq(f.file),
-              withIdCol = withIds)
-            .join(posDf, col("__pos") === col("__dvpos"), "left_semi")
-          val rows0 =
-            if (!withIds) raw.drop("__file", "__pos")
-            else raw.withColumn(RID,
-                if (pf.rid >= 0)
-                  coalesce(col(IdColName), lit(pf.rid) + col("__pos"))
-                else col(IdColName))
-              .drop("__file", "__pos", IdColName)
-          val manifests = prev.deletes.filter(_.seq > pf.seq).map(_.file)
-          if (manifests.isEmpty) rows0
-          else rows0.join(
-            spark.read.parquet(manifests: _*)
-              .select(col("_del_key")).distinct(),
-            col(prev.keyCol).cast("long") === col("_del_key"), "left_anti")
-        }.filter(_ != null)
+        // the rows the grown vectors newly mask: ONE masked scan of the
+        // grown files under prev's stats and manifests, keeping just the
+        // bitmap differences' ordinals
+        def grownRows(withIds: Boolean): Seq[DataFrame] =
+          if (grownStats.isEmpty) Seq.empty
+          else {
+            val rows = maskedScan(spark, snapFor.copy(deletes = prev.deletes),
+              grownStats.map(f => prevByFile(f.file)), withIds,
+              only = Some(grownStats.map { f =>
+                val bm = readDv(conf, f.dv.get._1)
+                prevByFile(f.file).dv.foreach(d => bm.andNot(readDv(conf, d._1)))
+                bm
+              }))
+            Seq(if (withIds) rows.withColumnRenamed(IdColName, RID) else rows)
+          }
         if (pairable) {
           val pre0 = (grownRows(withIds = true) ++
             (if (dropped.isEmpty) Seq.empty
-             else Seq(readWithRowIds(spark, snapFor, dropped)
+             else Seq(readFilesWithLineage(spark, snapFor, dropped)
                .withColumnRenamed(IdColName, RID))))
             .reduceOption(_.unionByName(_))
           val post0 =
             if (added.isEmpty) None
-            else Some(readWithRowIds(spark, cur, added)
+            else Some(readFilesWithLineage(spark, cur, added)
               .withColumnRenamed(IdColName, RID))
           // when BOTH images exist each side feeds three plan legs (the
           // updIds pairing plus its own semi/anti split) — materialize the

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Graphs
+import graft.operators.{Blocks, Graphs}
 
 /** PageRank on hand-computable graphs: dangling-mass redistribution,
   * isolated-node teleport rank, and mass conservation. */
@@ -55,5 +55,14 @@ class GraphsSpec extends SparkTestBase {
     val got = Graphs.triangleCounts(tri, "src", "dst")
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L), s"got $got")
+  }
+
+  test("Blocks.drop releases a checkpoint leaf and refuses any other frame") {
+    val cp = spark.range(10).toDF().localCheckpoint()
+    val derived = cp.select(col("id") + 1)
+    val e = intercept[IllegalArgumentException](Blocks.drop(derived))
+    assert(e.getMessage.contains("Project"), e.getMessage)
+    intercept[IllegalArgumentException](Blocks.drop(spark.range(3).toDF()))
+    Blocks.drop(cp)
   }
 }

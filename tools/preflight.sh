@@ -9,7 +9,7 @@
 # class of drift loud: it replays everything the driver replays, on the data
 # the driver reads, and exits nonzero on ANY divergence.
 #
-# Usage: tools/preflight.sh  (from repo root; ~10 min)
+# Usage: tools/preflight.sh  (from repo root; ~12 min)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -30,6 +30,13 @@ python3 tools/check_oracle.py "$SF_VERIFY" "$OUT" | tee /tmp/preflight_oracle.tx
 if grep -q '^FAIL' /tmp/preflight_oracle.txt; then
   echo "PREFLIGHT FAIL: oracle mismatches above"; exit 1
 fi
+
+echo "== preflight: perfbench lakehouse smoke (table-format models) =="
+python3 perfbench/run.py --workload lakehouse_mixed --seed 1 --seconds 14 --trace 0 \
+  > /tmp/preflight_perfbench.txt 2>&1 || {
+  tail -20 /tmp/preflight_perfbench.txt
+  echo "PREFLIGHT FAIL: perfbench lakehouse_mixed exited nonzero"; exit 1; }
+grep -E 'checks:' /tmp/preflight_perfbench.txt || true
 
 echo "== preflight: bench at $SF_BENCH =="
 SPARK_GRAFT_SF_DIR="$SF_BENCH" sbt -batch "runMain graft.Bench" >/dev/null
