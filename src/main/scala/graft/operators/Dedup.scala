@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Functions._
+import graft.sources.Parquet
 
 /** Deduplication suite for training-data pipelines (BASELINE.json north
   * star): exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine.
@@ -940,7 +941,7 @@ object Dedup {
                                    clustersPath: String, docs: DataFrame,
                                    idCol: String, sourceCol: String,
                                    priority: Column): DataFrame =
-    clusterRepresentatives(spark.read.parquet(clustersPath), docs,
+    clusterRepresentatives(Parquet.read(spark, clustersPath), docs,
       idCol, sourceCol, priority)
 
   /** INCREMENTALLY MAINTAINED NEAR-DUP PAIR GRAPH — the production
@@ -1234,7 +1235,7 @@ object Dedup {
     }
     val nFresh =
       if (freshFiles.isEmpty) 0L
-      else spark.read.parquet(freshFiles: _*).count()
+      else Parquet.read(spark, freshFiles: _*).count()
     val allNew = freshFiles ++ rewriteNew
     val newStats =
       if (allNew.isEmpty) Seq.empty

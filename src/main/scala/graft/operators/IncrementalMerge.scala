@@ -6,6 +6,8 @@ import java.time.temporal.ChronoUnit
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** §2.9 — the reference's batch-incremental engine: a `last_run_utc`
   * watermark bounds the extraction window; existing rows strictly older than
   * the window start are kept, everything newer is replaced by the fresh
@@ -74,7 +76,7 @@ object IncrementalMerge {
       * and then advance() would mask the loss permanently. */
     def read(): Option[Instant] =
       if (!pathExists(spark, path)) None
-      else spark.read.parquet(path)
+      else Parquet.read(spark, path)
         .filter($"key" === "last_run_utc")
         .select($"value").as[String]
         .collect().headOption.map(Instant.parse)

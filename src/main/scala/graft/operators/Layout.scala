@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** Data-layout operators for scan pruning — the write-side half of the
   * 100 TB story. Parquet readers skip files (and row groups) whose min/max
   * column statistics exclude a filter; that only works when the writer
@@ -129,7 +131,7 @@ object Layout {
   /** Read back a [[compact]]ed table without the layout-only group
     * column (consumers see the original contract columns). */
   def readCompacted(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("compaction_group")
+    Parquet.read(spark, path).drop("compaction_group")
 
   // The round-9 version-log pair (writeVersionLog/readAsOf) is superseded
   // by [[TableFormat]]: an APPEND-ONLY log (one commit file per version,
@@ -146,7 +148,7 @@ object Layout {
     * file-keyed, so the manifest is file-count-sized — metadata scale. */
   def buildManifest(spark: org.apache.spark.sql.SparkSession, path: String,
                     keyCol: String): DataFrame =
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
       .groupBy(input_file_name().as("file"))
       .agg(min(col(keyCol)).as("min_key"), max(col(keyCol)).as("max_key"),
         count(lit(1)).as("n_rows"))
@@ -159,7 +161,7 @@ object Layout {
     * File-count-sized, OR-mergeable, built once at write time. */
   def buildBloomManifest(spark: org.apache.spark.sql.SparkSession, path: String,
                          keyCol: String, numBits: Int, numHashes: Int): DataFrame =
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
       .groupBy(input_file_name().as("file"))
       .agg(graft.Functions.bloom_agg(col(keyCol), numBits, numHashes).as("key_bloom"))
 
@@ -185,13 +187,13 @@ object Layout {
     val all = manifest.select(col("file")).collect().map(_.getString(0))
     val untouched = all.filterNot(hit.contains)
     if (hit.nonEmpty)
-      spark.read.parquet(hit.toIndexedSeq: _*)
+      Parquet.read(spark, hit.toIndexedSeq: _*)
         .join(keys, Seq(keyCol), "left_anti")
         .write.mode("overwrite").parquet(outPath)
     val rewritten =
-      if (hit.nonEmpty) Some(spark.read.parquet(outPath)) else None
+      if (hit.nonEmpty) Some(Parquet.read(spark, outPath)) else None
     val carried =
-      if (untouched.nonEmpty) Some(spark.read.parquet(untouched.toIndexedSeq: _*)) else None
+      if (untouched.nonEmpty) Some(Parquet.read(spark, untouched.toIndexedSeq: _*)) else None
     val result = (rewritten, carried) match {
       case (Some(a), Some(b)) => a.unionByName(b)
       case (Some(a), None) => a
@@ -217,13 +219,13 @@ object Layout {
       .select(col("file")).collect().map(_.getString(0))
     val scan =
       if (selected.nonEmpty)
-        spark.read.parquet(selected.toIndexedSeq: _*)
+        Parquet.read(spark, selected.toIndexedSeq: _*)
           .filter(col(keyCol) >= lo && col(keyCol) <= hi)
       else {
         // no zone intersects: schema comes from the footers, the filter
         // folds to an empty LocalRelation — zero data pages read
         val all = manifest.select(col("file")).collect().map(_.getString(0))
-        spark.read.parquet(all.toIndexedSeq: _*).filter(lit(false))
+        Parquet.read(spark, all.toIndexedSeq: _*).filter(lit(false))
       }
     (scan, selected.length, total)
   }

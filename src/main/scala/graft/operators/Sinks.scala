@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** K1 at scale — the date-partitioned table posture behind the incremental
   * merge. The reference rewrites one whole sheet per sync
   * (MonarchMoneyMain-v3.py:931-993) because its table is 5,542 rows; at
@@ -18,38 +20,32 @@ object Sinks {
   /** Derive the partition key (yyyy-MM) from `dateCol` and write `df` under
     * dynamic partition overwrite. Returns the partitioned frame for
     * inspection. Idempotent per window: replaying the same batch rewrites
-    * the same partitions to the same content. */
+    * the same partitions to the same content. The mode is a per-write
+    * option, not the session-wide `spark.sql.sources.partitionOverwriteMode`:
+    * setting and restoring the session conf races with any other thread
+    * writing through the same session. */
   def writeMonthPartitioned(df: DataFrame, path: String, dateCol: String = "date"): DataFrame = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val partitioned = df.withColumn("__month", date_format(col(dateCol), "yyyy-MM"))
-      // hash-distribute by the partition value before the partitioned write
-      // (Iceberg's write.distribution-mode=hash): without it every scan
-      // task holding rows of a month opens its own file in that month's
-      // directory — tasks x months files of a few KB each, the small-file
-      // problem twice over at read time. One row-hash shuffle buys one
-      // file per month. (guide §6: output file sizing; AQE may still split
-      // a giant month across tasks, which is the correct large-scale
-      // behavior.)
-      partitioned.repartition(col("__month")).write
-        .mode(SaveMode.Overwrite)
-        .partitionBy("__month")
-        .parquet(path)
-      partitioned
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    val partitioned = df.withColumn("__month", date_format(col(dateCol), "yyyy-MM"))
+    // hash-distribute by the partition value before the partitioned write
+    // (Iceberg's write.distribution-mode=hash): without it every scan
+    // task holding rows of a month opens its own file in that month's
+    // directory — tasks x months files of a few KB each, the small-file
+    // problem twice over at read time. One row-hash shuffle buys one
+    // file per month. (guide §6: output file sizing; AQE may still split
+    // a giant month across tasks, which is the correct large-scale
+    // behavior.)
+    partitioned.repartition(col("__month")).write
+      .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__month")
+      .parquet(path)
+    partitioned
   }
 
   /** Read the partitioned table back without the synthetic partition column
     * (consumers see the original contract columns). */
   def readMonthPartitioned(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("__month")
+    Parquet.read(spark, path).drop("__month")
 
   /** K3 engine half — sheet-shaped CSV materialization (the reference
     * multiparts this file to the balance-history upload endpoint,

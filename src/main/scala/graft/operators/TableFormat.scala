@@ -8,6 +8,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.roaringbitmap.longlong.Roaring64Bitmap
 
 import graft.functions.BloomUtil
+import graft.sources.Parquet
 
 /** Unified table-format metadata layer — the single-log composition of the
   * three capabilities the round-9 entries proved separately: version-log
@@ -275,7 +276,7 @@ object TableFormat {
     require(bloomCols.forall(zoneCols.contains),
       s"fileStats: bloom.cols must name declared zone columns " +
         s"(got ${bloomCols.mkString(",")}; zones ${zoneCols.mkString(",")})")
-    val df = data.getOrElse(spark.read.parquet(files: _*))
+    val df = data.getOrElse(Parquet.read(spark, files: _*))
     val schema = df.schema
     def zl(c: String) = zoneLong(schema(c).dataType, col(c))
     // secondary blooms hash the ZONE-LONG image's base-10 string — the
@@ -551,9 +552,9 @@ object TableFormat {
         }.reduce(_.unionByName(_))
       case None =>
         val df =
-          if (!withIdCol) spark.read.parquet(files: _*)
+          if (!withIdCol) Parquet.read(spark, files: _*)
           else {
-            val base = spark.read.parquet(files: _*).schema
+            val base = Parquet.schema(spark, files: _*)
             val s =
               if (base.fieldNames.contains(IdColName)) base else plusId(base)
             spark.read.schema(s).parquet(files: _*)
@@ -1624,7 +1625,7 @@ object TableFormat {
                   files: Seq[String], numBits: Int, numHashes: Int,
                   zoneCols: Seq[String] = Seq.empty): Snapshot = {
     val stats = fileStats(spark, files, keyCol, numBits, numHashes, zoneCols)
-    val ddl = spark.read.parquet(files: _*).schema.toDDL
+    val ddl = Parquet.schema(spark, files: _*).toDDL
     commitTransform(spark, root, keyCol, numBits, numHashes, _ => stats,
       deriveSchema = _ => Some(ddl), op = Some("append"),
       zoneCols = Some(zoneCols))
@@ -1904,7 +1905,7 @@ object TableFormat {
                      extraProps: Map[String, String] = Map.empty,
                      filesSorted: Boolean = false): Snapshot = {
     val first = snapshot(spark, root)
-    val batch = if (files.isEmpty) None else Some(spark.read.parquet(files: _*))
+    val batch = if (files.isEmpty) None else Some(Parquet.read(spark, files: _*))
     val stats0 = batch.fold(Seq.empty[FileStat])(b =>
       fileStats(spark, files, first.keyCol, first.numBits,
         first.numHashes, first.zoneCols,
@@ -1943,7 +1944,7 @@ object TableFormat {
     val first = snapshot(spark, root)
     // ONE read of the new files (one schema inference) serves the stats,
     // the schema evolution and both constraint checks
-    val batch = spark.read.parquet(files: _*)
+    val batch = Parquet.read(spark, files: _*)
     val stats0 = fileStats(spark, files, first.keyCol, first.numBits,
       first.numHashes, first.zoneCols,
       spec = first.props.get(PartitionSpecProp),
@@ -2293,7 +2294,7 @@ object TableFormat {
     def nonEmpty(files: Seq[String]): Seq[String] =
       if (files.isEmpty) Seq.empty
       else {
-        val counts = spark.read.parquet(files: _*)
+        val counts = Parquet.read(spark, files: _*)
           .groupBy(input_file_name().as("f")).count().collect()
           .map(r => r.getString(0)).toSet
         files.filter(f => counts.exists(c =>
@@ -2821,7 +2822,7 @@ object TableFormat {
           "only rows it is replacing")
     }
     if (files.nonEmpty)
-      checkConstraints(spark, first, spark.read.parquet(files: _*),
+      checkConstraints(spark, first, Parquet.read(spark, files: _*),
         "replaceWhere")
     var ledger = (0, 0, 0)
     val snap = commitTransform(spark, root, first.keyCol, first.numBits,
@@ -2832,7 +2833,7 @@ object TableFormat {
           "replaceWhere")
         if (files.nonEmpty)
           recheckConstraintsIfChanged(spark, first, cur,
-            spark.read.parquet(files: _*), "replaceWhere")
+            Parquet.read(spark, files: _*), "replaceWhere")
         def boundsOf(f: FileStat): Option[(Long, Long)] =
           if (boundCol == cur.keyCol) Some((f.minKey, f.maxKey))
           else f.zones.get(boundCol)
@@ -2901,7 +2902,7 @@ object TableFormat {
         "catalog INSERT path (clustered by the spec's transforms)"))
     val newTuples = newStats.flatMap(_.part.map(_._2.toSeq)).toSet
     if (files.nonEmpty)
-      checkConstraints(spark, first, spark.read.parquet(files: _*),
+      checkConstraints(spark, first, Parquet.read(spark, files: _*),
         "overwritePartitionsDynamic")
     var ledger = (0, 0)
     val snap = commitTransform(spark, root, first.keyCol, first.numBits,
@@ -2910,7 +2911,7 @@ object TableFormat {
           "overwritePartitionsDynamic: nothing committed"))
         if (files.nonEmpty)
           recheckConstraintsIfChanged(spark, first, cur,
-            spark.read.parquet(files: _*), "overwritePartitionsDynamic")
+            Parquet.read(spark, files: _*), "overwritePartitionsDynamic")
         cur.files.foreach(f => require(f.part.exists(_._1 == spec),
           s"overwritePartitionsDynamic: existing file ${f.file} carries " +
             "no current-spec partition tuple (mixed layout, e.g. after " +
@@ -3059,7 +3060,7 @@ object TableFormat {
     def uriPath(s: String) = uriPathOf(s)
     val byPath = posByFile.map { case (f, bm) => uriPath(f) -> bm }
     val batch =
-      if (newFiles.isEmpty) None else Some(spark.read.parquet(newFiles: _*))
+      if (newFiles.isEmpty) None else Some(Parquet.read(spark, newFiles: _*))
     batch.foreach(b => checkConstraints(spark, base, b, s"commitDelta($op)"))
     val newStats0 =
       if (newFiles.isEmpty) Seq.empty
@@ -3148,7 +3149,7 @@ object TableFormat {
       .write.mode("overwrite").parquet(out)
     // per-manifest-file key counts + bounds: bounded metadata (one row
     // per file); zero-row part files never enter the commit
-    val counts = spark.read.parquet(listParquet(spark, out): _*)
+    val counts = Parquet.read(spark, listParquet(spark, out): _*)
       .groupBy(input_file_name().as("f"))
       .agg(count(lit(1)).as("n"), min(col("_del_key")).as("mn"),
         max(col("_del_key")).as("mx"))
@@ -3310,13 +3311,13 @@ object TableFormat {
           case Seq(single) => single
           case group =>
             val out = s"$dataDir/mordel-${java.util.UUID.randomUUID().toString}"
-            spark.read.parquet(group.map(_.file): _*)
+            Parquet.read(spark, group.map(_.file): _*)
               .select(col("_del_key")).distinct().repartition(1)
               .write.mode("overwrite").parquet(out)
             val files = listParquet(spark, out)
             require(files.size == 1,
               s"compactManifests: expected one merged file, got ${files.size}")
-            val prof = spark.read.parquet(files.head)
+            val prof = Parquet.read(spark, files.head)
               .agg(count(lit(1)), min(col("_del_key")), max(col("_del_key")))
               .collect()(0)
             // seq = the group's MAX, explicitly (never restamped to the
@@ -4179,7 +4180,7 @@ object TableFormat {
         .repartition(1).write.mode("overwrite").parquet(out)
       val files = listParquet(spark, out)
       val stats = fileStats(spark, files, "grp", 1 << 10, 3)
-      val ddl = spark.read.parquet(files: _*).schema.toDDL
+      val ddl = Parquet.schema(spark, files: _*).toDDL
       commitTransform(spark, viewRoot, "grp", 1 << 10, 3,
         { curOpt =>
           if (curOpt.nonEmpty) throw new IllegalStateException(
@@ -4264,7 +4265,7 @@ object TableFormat {
         src.numHashes, src.zoneCols,
         spec = src.props.get(PartitionSpecProp))
       val ddl = src.schemaDdl.orElse(
-        if (files.nonEmpty) Some(spark.read.parquet(files: _*).schema.toDDL)
+        if (files.nonEmpty) Some(Parquet.schema(spark, files: _*).toDDL)
         else None)
       commitTransform(spark, targetRoot, src.keyCol, src.numBits, src.numHashes,
         { curOpt =>
@@ -4314,7 +4315,7 @@ object TableFormat {
       delta.select(keyL.as("_del_key")).filter(col("_del_key").isNotNull)
         .distinct().repartition(1).write.mode("overwrite").parquet(manOut)
       val manFiles = listParquet(spark, manOut)
-      val keyProf = spark.read.parquet(manFiles: _*)
+      val keyProf = Parquet.read(spark, manFiles: _*)
         .agg(count(lit(1)), min(col("_del_key")), max(col("_del_key")))
         .collect()(0)
       val ddl = src.schemaDdl.orElse(cur.schemaDdl)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   *
   * One parquet file per table under an sf directory. At cluster scale these
   * would be partitioned directories / catalog tables; the reader stays the
-  * same (`spark.read.parquet` on a path prefix), so nothing here assumes a
+  * same ([[Parquet.read]] on a path prefix), so nothing here assumes a
   * single file.
   */
 object Tables {
@@ -18,7 +18,7 @@ object Tables {
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     require(names.contains(name), s"unknown table $name")
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    Parquet.read(spark, s"$sfDir/$name.parquet")
   }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "lineitem")

@@ -11,6 +11,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.TableFormat
+import graft.sources.Parquet
 
 /** GROUP-BASED (copy-on-write) row-level SQL operations — what makes
   * `MERGE INTO graft.t`, `UPDATE graft.t SET ...` and arbitrary-predicate
@@ -259,7 +260,7 @@ private class GraftReplaceDataWrite(op: GraftRowLevelOperation, root: String,
         .select(col(k), col(TableFormat.IdColName).as("__oid"))
         .groupBy(col(k))
         .agg(min(col("__oid")).as("__oid"), count(lit(1)).as("__oc"))
-      val batch = spark.read.parquet(newFiles0: _*)
+      val batch = Parquet.read(spark, newFiles0: _*)
       val newCounts = batch.groupBy(col(k)).agg(count(lit(1)).as("__nc"))
       val ids = olds.join(newCounts, Seq(k))
         .filter(col("__oc") === 1 && col("__nc") === 1)
@@ -287,7 +288,7 @@ private class GraftReplaceDataWrite(op: GraftRowLevelOperation, root: String,
       case _ => "merge"
     }
     TableFormat.replaceDataFiles(spark, root, snap, replaced, stats,
-      if (newFiles.isEmpty) None else Some(spark.read.parquet(newFiles: _*)),
+      if (newFiles.isEmpty) None else Some(Parquet.read(spark, newFiles: _*)),
       opName)
   }
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.{Dedup, IncrementalMerge, Packing}
+import graft.sources.Parquet
 
 /** Structured-Streaming re-expression of the reference's incremental model
   * (SURVEY §2.9). The reference is batch-incremental: a watermark bounds each
@@ -239,7 +240,7 @@ object Streams {
             threshold = threshold)
           .write.mode("overwrite").parquet(corpusPath)
       else
-        Dedup.incrementalDedup(spark.read.parquet(corpusPath), batch,
+        Dedup.incrementalDedup(Parquet.read(spark, corpusPath), batch,
             idCol, textCol, threshold = threshold)
           .write.mode("append").parquet(corpusPath)
     }
@@ -616,7 +617,7 @@ object Streams {
     val last = lastCommittedBatch(fs, rootP)
     val dirs = committedKindDirs(fs, rootP, "packed", last)
     require(dirs.nonEmpty, s"packedExport: nothing committed under $root")
-    spark.read.parquet(dirs: _*)
+    Parquet.read(spark, dirs: _*)
   }
 
   /** Sink-side continuous SEMANTIC (embedding) dedup with a persisted
@@ -694,7 +695,7 @@ object Streams {
           if (bootstrap)
             graft.operators.Similarity.derivedCodebook(usable, "id", "vec")
           else spark.sparkContext.broadcast(
-            spark.read.parquet(cbPath.toString)
+            Parquet.read(spark, cbPath.toString)
               .orderBy(col("cid")).select(col("vec"))
               .collect().map(_.getSeq[Double](0).toArray))
         // id stays UNTYPED (like foreachBatchIndexedDedup's): casting to
@@ -764,7 +765,7 @@ object Streams {
     val last = lastCommittedBatch(fs, rootP)
     val dirs = committedKindDirs(fs, rootP, "vectors", last)
     require(dirs.nonEmpty, s"embeddingCorpus: nothing committed under $root")
-    dirs.map(d => spark.read.parquet(d)).reduce(_.unionByName(_))
+    dirs.map(d => Parquet.read(spark, d)).reduce(_.unionByName(_))
   }
 
   /** The deduped corpus maintained by [[foreachBatchIndexedDedup]] —
@@ -774,7 +775,7 @@ object Streams {
     val last = lastCommittedBatch(fs, rootP)
     val dirs = committedKindDirs(fs, rootP, "corpus", last)
     require(dirs.nonEmpty, s"indexedCorpus: nothing committed under $root")
-    spark.read.parquet(dirs: _*)
+    Parquet.read(spark, dirs: _*)
   }
 
   /** The committed slice of an index/corpus layout under `<root>/<kind>`:
@@ -889,7 +890,7 @@ object Streams {
     val last = lastCommittedBatch(fs, rootP)
     val dirs = if (last < 0L) Seq.empty else committedKindDirs(fs, rootP, "cms", last)
     if (dirs.isEmpty) Seq.empty[(Int, Long, Long)].toDF("j", "bucket", "cnt")
-    else dirs.map(spark.read.parquet(_)).reduce(_.unionByName(_))
+    else dirs.map(Parquet.read(spark, _)).reduce(_.unionByName(_))
       .groupBy(col("j"), col("bucket")).agg(sum(col("cnt")).as("cnt"))
   }
 
@@ -908,7 +909,7 @@ object Streams {
     batches.filter(_._1 <= upTo).foreach(e => fs.delete(e._2, true))
     val live = committedKindDirs(fs, rootP, "cms", last)
     if (live.size >= 2) {
-      val merged = live.map(spark.read.parquet(_)).reduce(_.unionByName(_))
+      val merged = live.map(Parquet.read(spark, _)).reduce(_.unionByName(_))
         .groupBy(col("j"), col("bucket")).agg(sum(col("cnt")).as("cnt"))
       val staging = new org.apache.hadoop.fs.Path(kindP, s".base_staging.$last")
       fs.delete(staging, true)
@@ -947,7 +948,7 @@ object Streams {
       batches.filter(_._1 <= upTo).foreach(e => fs.delete(e._2, true))
       val live = committedKindDirs(fs, rootP, kind, last)
       if (live.size >= 2) {
-        val merged = live.map(spark.read.parquet(_)).reduce(_.unionByName(_))
+        val merged = live.map(Parquet.read(spark, _)).reduce(_.unionByName(_))
         val staging = new org.apache.hadoop.fs.Path(kindP, s".base_staging.$last")
         fs.delete(staging, true)
         partColName match {
@@ -1170,7 +1171,7 @@ object Streams {
     * has been published yet. */
   def publishedSnapshot(spark: SparkSession, path: String): Option[DataFrame] = {
     recoverPublished(spark, path)
-    if (IncrementalMerge.pathExists(spark, path)) Some(spark.read.parquet(path))
+    if (IncrementalMerge.pathExists(spark, path)) Some(Parquet.read(spark, path))
     else None
   }
 

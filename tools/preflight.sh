@@ -38,6 +38,13 @@ python3 perfbench/run.py --workload lakehouse_mixed --seed 1 --seconds 14 --trac
   echo "PREFLIGHT FAIL: perfbench lakehouse_mixed exited nonzero"; exit 1; }
 grep -E 'checks:' /tmp/preflight_perfbench.txt || true
 
+echo "== preflight: perfbench sync smoke (sync-tick models) =="
+python3 perfbench/run.py --workload sync_incremental --seed 1 --seconds 14 --trace 0 \
+  > /tmp/preflight_perfbench_sync.txt 2>&1 || {
+  tail -20 /tmp/preflight_perfbench_sync.txt
+  echo "PREFLIGHT FAIL: perfbench sync_incremental exited nonzero"; exit 1; }
+grep -E 'checks:' /tmp/preflight_perfbench_sync.txt || true
+
 echo "== preflight: bench at $SF_BENCH =="
 SPARK_GRAFT_SF_DIR="$SF_BENCH" sbt -batch "runMain graft.Bench" >/dev/null
 python3 - <<'EOF'
