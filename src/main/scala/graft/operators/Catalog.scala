@@ -12,15 +12,15 @@ import org.apache.spark.sql.SparkSession
   * cannot give is a CONSISTENT view across tables — a reader of table A
   * at v5 and table B at v3 can observe a fact and its derived aggregate
   * out of step. The catalog closes that gap with one more level of the
-  * same machinery: an append-only log of catalog commits, each carrying
-  * the complete `name -> (table root, pinned version)` map, published
-  * with the identical rename-no-overwrite CAS [[TableFormat.tryCommit]]
-  * uses. A writer prepares its per-table commits FIRST (each a normal
-  * TableFormat commit — uncommitted-to-catalog versions are simply
-  * invisible to catalog readers), then swings every pointer in ONE
-  * catalog commit; a reader resolves the catalog ONCE and pins each
-  * table at its recorded version, so it sees either all of a
-  * transaction's tables or none of it. Snapshot isolation composes:
+  * same machinery: a [[CommitLog]] (`<croot>/_catlog`, the log every
+  * table uses too) of catalog commits, each carrying the complete
+  * `name -> (table root, pinned version)` map. A writer prepares its
+  * per-table commits FIRST (each a normal TableFormat commit —
+  * uncommitted-to-catalog versions are simply invisible to catalog
+  * readers), then swings every pointer in ONE catalog commit; a reader
+  * resolves the catalog ONCE and pins each table at its recorded
+  * version, so it sees either all of a transaction's tables or none of
+  * it. Snapshot isolation composes:
   * pinned table versions are immutable file sets, so a catalog snapshot
   * is reproducible indefinitely (until retention), and catalog time
   * travel is cross-table time travel.
@@ -40,27 +40,9 @@ object Catalog {
     * catalog snapshot binds it to. */
   final case class TableRef(root: String, version: Long)
 
-  private def logDir(croot: String) = s"$croot/_catlog"
-  private def commitName(v: Long) = f"v$v%020d.json"
-
-  private def fileContext(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.getUri, spark.sparkContext.hadoopConfiguration), fs, p)
-  }
-
   /** All committed catalog versions, ascending — one directory listing. */
-  def versions(spark: SparkSession, croot: String): Seq[Long] = {
-    val (_, fs, _) = fileContext(spark, croot)
-    val dir = new org.apache.hadoop.fs.Path(logDir(croot))
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-      .sorted
-  }
+  def versions(spark: SparkSession, croot: String): Seq[Long] =
+    CommitLog.catalog(spark, croot).versions
 
   private def render(version: Long, tables: Map[String, TableRef]): String = {
     def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
@@ -88,53 +70,23 @@ object Catalog {
     * catalog. Returns (catalog version, table map). */
   def resolve(spark: SparkSession, croot: String,
               asOf: Option[Long] = None): (Long, Map[String, TableRef]) = {
+    val log = CommitLog.catalog(spark, croot)
     val v = asOf.getOrElse {
-      val vs = versions(spark, croot)
+      val vs = log.versions
       require(vs.nonEmpty, s"resolve: no catalog commits at $croot")
       vs.last
     }
-    val (_, fs, _) = fileContext(spark, croot)
-    val f = new org.apache.hadoop.fs.Path(logDir(croot), commitName(v))
-    require(fs.exists(f), s"resolve: no catalog version $v at $croot")
-    val in = fs.open(f)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    parse(text)
+    require(log.exists(v), s"resolve: no catalog version $v at $croot")
+    parse(log.read(v))
   }
 
-  /** Publish catalog version `version` — atomic via rename-no-overwrite;
+  /** Publish catalog version `version` ([[CommitLog.tryCommit]]);
     * false = another committer won this version. */
   def tryCommit(spark: SparkSession, croot: String, version: Long,
                 tables: Map[String, TableRef]): Boolean = {
-    require(version >= 1, s"tryCommit: versions start at 1, got $version")
     require(tables.nonEmpty, "tryCommit: empty table map")
-    val (fc, fs, _) = fileContext(spark, croot)
-    val dir = new org.apache.hadoop.fs.Path(logDir(croot))
-    fs.mkdirs(dir)
-    val dst = new org.apache.hadoop.fs.Path(dir, commitName(version))
-    if (fs.exists(dst)) return false
-    // stage OUTSIDE the log dir: a concurrent versions() listing stats
-    // every entry of the dir after enumerating it, so a tmp file renamed
-    // or deleted mid-listing throws FileNotFoundException in the lister —
-    // a sibling staging dir keeps the listed dir append-only (only
-    // immutable v*.json ever appear there)
-    val tmpDir = new org.apache.hadoop.fs.Path(logDir(croot) + ".tmp")
-    fs.mkdirs(tmpDir)
-    val tmp = new org.apache.hadoop.fs.Path(tmpDir,
-      s"$version-${java.util.UUID.randomUUID().toString}")
-    val out = fs.create(tmp, true)
-    try out.write(render(version, tables)
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    try { fc.rename(tmp, dst); true }
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        fs.delete(tmp, false); false
-      case e: java.io.IOException =>
-        fs.delete(tmp, false)
-        if (fs.exists(dst)) false else throw e
-    }
+    CommitLog.catalog(spark, croot).tryCommit(version,
+      render(version, tables).getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** Optimistic catalog transaction: derive the next table map from the
@@ -144,19 +96,16 @@ object Catalog {
     * throw — silently overwriting a racer's pointer would undo their
     * commit. Returns (catalog version, committed map). */
   def commitTransform(spark: SparkSession, croot: String,
-                      derive: Option[Map[String, TableRef]] => Map[String, TableRef],
-                      maxAttempts: Int = 20): (Long, Map[String, TableRef]) = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val vs = versions(spark, croot)
-      val cur = if (vs.isEmpty) None else Some(resolve(spark, croot, Some(vs.last))._2)
+                      derive: Option[Map[String, TableRef]] => Map[String, TableRef])
+      : (Long, Map[String, TableRef]) = {
+    val log = CommitLog.catalog(spark, croot)
+    log.retry {
+      val vs = log.versions
+      val cur = vs.lastOption.map(v => resolve(spark, croot, Some(v))._2)
       val next = vs.lastOption.getOrElse(0L) + 1L
       val tables = derive(cur)
-      if (tryCommit(spark, croot, next, tables)) return (next, tables)
-      attempt += 1
+      if (tryCommit(spark, croot, next, tables)) Some((next, tables)) else None
     }
-    throw new IllegalStateException(
-      s"commitTransform: lost the catalog commit race $maxAttempts times at $croot")
   }
 
   /** The common transaction: atomically swing the pointers for

@@ -24,17 +24,13 @@ import graft.sources.Parquet
   * generalized from one scalar to a full snapshot).
   *
   * Concurrency: commits are OPTIMISTIC. A writer resolves the latest
-  * snapshot, computes its new file set, and publishes version v+1 by
-  * writing a temp file and renaming it to `v<20-digit>.json` via
-  * `FileContext.rename` with no OVERWRITE option — the rename FAILS when
-  * the destination exists (the HDFS commit primitive Delta's HDFSLogStore
-  * uses), so two racers to the same version cannot both win.
-  * [[commitTransform]] wraps the whole read-compute-publish cycle in a
-  * retry loop: the loser re-resolves the NEW snapshot and re-derives its
-  * change against it, which is what makes concurrent compaction + delete
-  * serialize correctly (proven in TableFormatSpec). On stores without an
-  * atomic no-overwrite rename (S3), this layer is where a conditional-put
-  * or commit-service implementation would slot in.
+  * snapshot, computes its new file set, and publishes version v+1
+  * through the table's [[CommitLog]] (staged, then renamed with no
+  * overwrite, so two racers to the same version cannot both win).
+  * [[commitTransform]] wraps the whole read-compute-publish cycle in the
+  * log's retry loop: the loser re-resolves the NEW snapshot and
+  * re-derives its change against it, which is what makes concurrent
+  * compaction + delete serialize correctly (proven in TableFormatSpec).
   *
   * Snapshot isolation falls out of immutability: a rewrite commits NEW
   * files and never touches old ones, so any reader pinned to an older
@@ -195,14 +191,9 @@ object TableFormat {
                             zoneCols: Seq[String] = Seq.empty,
                             deletes: Seq[DeleteFile] = Seq.empty)
 
-  private def logDir(root: String) = s"$root/_log"
-  private def commitName(v: Long) = f"v$v%020d.json"
-
-  private def fileContext(spark: SparkSession, path: String) = {
+  private def fsOf(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.getUri, spark.sparkContext.hadoopConfiguration), fs, p)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
   // ---- per-file statistics (one distributed aggregate, metadata-out) ----
@@ -470,22 +461,16 @@ object TableFormat {
   // ---- deletion vectors (positional deletes) ------------------------------
 
   /** Write a deletion-vector sidecar: the roaring bitmap's portable
-    * serialization, temp-file + rename so a crashed writer never leaves
-    * a half-written sidecar a commit could reference. Returns the
-    * bitmap's cardinality (the `dv_rows` the commit records). */
+    * serialization, staged and renamed ([[CommitLog.publish]]) so a
+    * crashed writer never leaves a half-written sidecar a commit could
+    * reference. Returns the bitmap's cardinality (the `dv_rows` the
+    * commit records). */
   def writeDv(conf: org.apache.hadoop.conf.Configuration, path: String,
               bm: org.roaringbitmap.longlong.Roaring64Bitmap): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(
-      p.getParent, s".${p.getName}.${java.util.UUID.randomUUID()}.tmp")
-    fs.mkdirs(p.getParent)
-    val out = new java.io.DataOutputStream(fs.create(tmp, true))
-    try bm.serialize(out) finally out.close()
-    if (!fs.rename(tmp, p)) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(s"writeDv: rename failed at $path")
-    }
+    if (!CommitLog.publish(conf, p, p.getParent,
+        out => bm.serialize(new java.io.DataOutputStream(out)), overwrite = false))
+      throw new IllegalStateException(s"writeDv: a sidecar already exists at $path")
     bm.getLongCardinality
   }
 
@@ -792,16 +777,8 @@ object TableFormat {
 
   /** All committed versions, ascending — ONE directory listing, no data
     * IO. Empty when the table has never been committed. */
-  def versions(spark: SparkSession, root: String): Seq[Long] = {
-    val (_, fs, _) = fileContext(spark, root)
-    val dir = new org.apache.hadoop.fs.Path(logDir(root))
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-      .sorted
-  }
+  def versions(spark: SparkSession, root: String): Seq[Long] =
+    CommitLog.table(spark, root).versions
 
   /** Timestamp time travel — "the table as it was at `timestampMs`": the
     * latest version whose commit file landed at or before the instant,
@@ -811,16 +788,8 @@ object TableFormat {
     * pins remain the deterministic contract. */
   def snapshotAsOfTime(spark: SparkSession, root: String,
                        timestampMs: Long): Snapshot = {
-    val (_, fs, _) = fileContext(spark, root)
-    val dir = new org.apache.hadoop.fs.Path(logDir(root))
-    require(fs.exists(dir), s"snapshotAsOfTime: no commits under ${logDir(root)}")
-    val candidates = fs.listStatus(dir).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        n.startsWith("v") && n.endsWith(".json") &&
-          st.getModificationTime <= timestampMs
-      }
-      .map(_.getPath.getName.stripPrefix("v").stripSuffix(".json").toLong)
+    val candidates = CommitLog.table(spark, root).listing
+      .collect { case (v, mtime) if mtime <= timestampMs => v }
     require(candidates.nonEmpty,
       s"snapshotAsOfTime: no version committed at or before $timestampMs at $root")
     snapshot(spark, root, Some(candidates.max))
@@ -833,24 +802,17 @@ object TableFormat {
     * zone/bloom stats. Nothing downstream re-reads the log. */
   def snapshot(spark: SparkSession, root: String,
                asOf: Option[Long] = None): Snapshot = {
-    val (_, fs, _) = fileContext(spark, root)
+    val log = CommitLog.table(spark, root)
     val v = asOf match {
       case Some(want) =>
-        require(fs.exists(new org.apache.hadoop.fs.Path(logDir(root), commitName(want))),
-          s"snapshot: version $want not in the log at ${logDir(root)}")
+        require(log.exists(want), s"snapshot: version $want not in the log at ${log.dir}")
         want
       case None =>
-        val vs = versions(spark, root)
-        require(vs.nonEmpty, s"snapshot: no commits under ${logDir(root)}")
+        val vs = log.versions
+        require(vs.nonEmpty, s"snapshot: no commits under ${log.dir}")
         vs.last
     }
-    val p = new org.apache.hadoop.fs.Path(logDir(root), commitName(v))
-    val in = fs.open(p)
-    val text =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    rekeyStats(parseCommit(root, text))
+    rekeyStats(parseCommit(root, log.read(v)))
   }
 
   /** Canonical rendering of a partition spec — the exact format the SQL
@@ -924,11 +886,9 @@ object TableFormat {
     snap.copy(files = files)
   }
 
-  /** Publish `files` as version `version` — returns false when the CAS
-    * loses (that version is already committed). The commit is staged to a
-    * temp name and renamed WITHOUT overwrite, so a half-written commit is
-    * never visible under a `v*.json` name and two racers cannot both
-    * publish the same version. */
+  /** Publish `files` as version `version` through the table's
+    * [[CommitLog]] — returns false when the CAS loses (that version is
+    * already committed). */
   def tryCommit(spark: SparkSession, root: String, version: Long,
                 keyCol: String, numBits: Int, numHashes: Int,
                 files: Seq[FileStat],
@@ -937,42 +897,15 @@ object TableFormat {
                 op: Option[String] = None,
                 zoneCols: Seq[String] = Seq.empty,
                 deletes: Seq[DeleteFile] = Seq.empty): Boolean = {
-    require(version >= 1, s"tryCommit: versions start at 1, got $version")
     // stamp sequence numbers: seq < 0 means "new in THIS commit" — files
     // carried by reference keep the version that first added them, which
     // is what scopes delete manifests to strictly-older data
     val stampedFiles = files.map(f => if (f.seq < 0) f.copy(seq = version) else f)
     val stampedDeletes = deletes.map(d => if (d.seq < 0) d.copy(seq = version) else d)
-    val (fc, fs, _) = fileContext(spark, root)
-    val dir = new org.apache.hadoop.fs.Path(logDir(root))
-    fs.mkdirs(dir)
-    val dst = new org.apache.hadoop.fs.Path(dir, commitName(version))
-    if (fs.exists(dst)) return false // fast path; the rename below is the gate
-    // stage OUTSIDE the log dir (the Catalog.tryCommit rule): versions()
-    // stats every listed entry, and a tmp file renamed/deleted by a racer
-    // mid-listing throws FileNotFoundException in the lister; the sibling
-    // staging dir keeps the listed log append-only
-    val tmpDir = new org.apache.hadoop.fs.Path(logDir(root) + ".tmp")
-    fs.mkdirs(tmpDir)
-    val tmp = new org.apache.hadoop.fs.Path(tmpDir,
-      s"$version-${java.util.UUID.randomUUID().toString}")
-    val out = fs.create(tmp, true)
-    try out.write(
+    CommitLog.table(spark, root).tryCommit(version,
       renderCommit(version, keyCol, numBits, numHashes, stampedFiles, props,
         schemaDdl, op, zoneCols, stampedDeletes)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    try { fc.rename(tmp, dst); true }
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        fs.delete(tmp, false); false
-      case e: java.io.IOException =>
-        fs.delete(tmp, false)
-        // only an actual race reads as a CAS loss; a genuine IO failure
-        // (permissions, disk full) must surface, not masquerade as 20
-        // rounds of phantom contention in commitTransform
-        if (fs.exists(dst)) false else throw e
-    }
   }
 
   /** A committer's declared READ SCOPE intersected a concurrent commit —
@@ -1061,7 +994,6 @@ object TableFormat {
   def commitTransform(spark: SparkSession, root: String, keyCol: String,
                       numBits: Int, numHashes: Int,
                       derive: Option[Snapshot] => Seq[FileStat],
-                      maxAttempts: Int = 20,
                       deriveProps: Option[Snapshot] => Map[String, String] =
                         _.map(_.props).getOrElse(Map.empty),
                       deriveSchema: Option[Snapshot] => Option[String] =
@@ -1070,9 +1002,9 @@ object TableFormat {
                       zoneCols: Option[Seq[String]] = None,
                       deriveDeletes: Option[Snapshot] => Seq[DeleteFile] =
                         _.map(_.deletes).getOrElse(Seq.empty)): Snapshot = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val vs = versions(spark, root)
+    val log = CommitLog.table(spark, root)
+    log.retry {
+      val vs = log.versions
       val cur = if (vs.isEmpty) None else Some(snapshot(spark, root, Some(vs.last)))
       val next = cur.map(_.version + 1).getOrElse(1L)
       val files0 = derive(cur)
@@ -1109,16 +1041,14 @@ object TableFormat {
       val zc = zoneCols.orElse(cur.map(_.zoneCols)).getOrElse(Seq.empty)
       val dels = deriveDeletes(cur)
         .map(d => if (d.seq < 0) d.copy(seq = next) else d)
+      // re-key through the mapping ledger like snapshot() does, so a
+      // caller holding this return sees current-name stats too
       if (tryCommit(spark, root, next, keyCol, numBits, numHashes, files,
           props, schemaDdl, op, zc, dels))
-        // re-key through the mapping ledger like snapshot() does, so a
-        // caller holding this return sees current-name stats too
-        return rekeyStats(Snapshot(root, next, keyCol, numBits, numHashes,
-          files, props, schemaDdl, op, zc, dels))
-      attempt += 1
+        Some(rekeyStats(Snapshot(root, next, keyCol, numBits, numHashes,
+          files, props, schemaDdl, op, zc, dels)))
+      else None
     }
-    throw new IllegalStateException(
-      s"commitTransform: lost the commit race $maxAttempts times at $root")
   }
 
   // ---- reads (always through a resolved snapshot) ------------------------
@@ -1683,7 +1613,7 @@ object TableFormat {
     * caveat [[cloneTable]] documents for source-side retention. */
   def renameRoot(spark: SparkSession, oldRoot: String,
                  newRoot: String): Unit = {
-    val (fc, fs, oldP) = fileContext(spark, oldRoot)
+    val (fs, oldP) = fsOf(spark, oldRoot)
     val newP = new org.apache.hadoop.fs.Path(newRoot)
     require(fs.exists(oldP), s"renameRoot: nothing at $oldRoot")
     require(versions(spark, oldRoot).nonEmpty,
@@ -1702,26 +1632,16 @@ object TableFormat {
         newRoot + sp.stripPrefix(oldUri)
       else s
     }
-    versions(spark, newRoot).foreach { v =>
-      val p = new org.apache.hadoop.fs.Path(logDir(newRoot), commitName(v))
-      val in = fs.open(p)
-      val text =
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      val snap = parseCommit(newRoot, text) // RAW: no stats re-keying here
+    val log = CommitLog.table(spark, newRoot)
+    log.versions.foreach { v =>
+      val snap = parseCommit(newRoot, log.read(v)) // RAW: no stats re-keying here
       val rewritten = renderCommit(v, snap.keyCol, snap.numBits,
         snap.numHashes,
         snap.files.map(f => f.copy(file = rewrite(f.file),
           dv = f.dv.map { case (dp, n) => (rewrite(dp), n) })),
         snap.props, snap.schemaDdl, snap.op, snap.zoneCols,
         snap.deletes.map(d => d.copy(file = rewrite(d.file))))
-      val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-        s".rename-${java.util.UUID.randomUUID()}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(rewritten.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      log.rewrite(v, rewritten.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
   }
 
@@ -3752,7 +3672,7 @@ object TableFormat {
   /** Live branch names of a table: subdirectories of `_branch/` that
     * carry a commit log. */
   def listBranches(spark: SparkSession, root: String): Seq[String] = {
-    val (_, fs, _) = fileContext(spark, root)
+    val (fs, _) = fsOf(spark, root)
     val p = new org.apache.hadoop.fs.Path(s"$root/_branch")
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq.filter(_.isDirectory)
@@ -3781,7 +3701,7 @@ object TableFormat {
     * Returns (files removed, referenced files kept). */
   def dropBranch(spark: SparkSession, root: String, name: String): (Int, Int) = {
     val broot = branchRoot(root, name)
-    val (_, fs, _) = fileContext(spark, root)
+    val (fs, _) = fsOf(spark, root)
     require(listBranches(spark, broot).isEmpty,
       s"dropBranch: '$name' has live nested branches " +
         s"(${listBranches(spark, broot).mkString(", ")}) — drop them first")
@@ -3796,7 +3716,7 @@ object TableFormat {
     }.toSet
     var removed = 0
     var kept = 0
-    val logPath = new org.apache.hadoop.fs.Path(logDir(broot))
+    val logPath = CommitLog.table(spark, broot).dir
     def sweep(p: org.apache.hadoop.fs.Path): Boolean = { // true = dir emptied
       var empty = true
       if (fs.exists(p)) fs.listStatus(p).foreach { st =>
@@ -4368,7 +4288,10 @@ object TableFormat {
     * grace window out of the sweep, so only run with grace shorter than
     * an in-flight commit when ingest is quiesced. Paths compare in
     * URI-path form (listing and `input_file_name` render schemes
-    * differently). Returns (expired versions, deleted data files). */
+    * differently). Commit files a crashed committer staged but never
+    * renamed are swept under the same grace window
+    * ([[CommitLog.sweepStaging]]). Returns (expired versions, deleted
+    * data files). */
   def expireSnapshots(spark: SparkSession, root: String, keepLast: Int,
                       dataDirs: Seq[String],
                       graceMs: Long = 3600000L,
@@ -4378,8 +4301,10 @@ object TableFormat {
     // would look orphaned and be deleted out from under the new snapshot
     // — pass 0 only with ingest quiesced
     require(keepLast >= 1, s"expireSnapshots: keepLast must be >= 1, got $keepLast")
-    val (_, fs, _) = fileContext(spark, root)
-    val vs = versions(spark, root)
+    val (fs, _) = fsOf(spark, root)
+    val log = CommitLog.table(spark, root)
+    val listing = log.listing
+    val vs = listing.map(_._1)
     // named refs (tags) PROTECT their versions from the horizon — the
     // Iceberg ref-retention rule: "prod points at v7" must keep v7
     // readable however far the head advances
@@ -4397,10 +4322,8 @@ object TableFormat {
       if (olderThanMs <= 0L) (candidates, Seq.empty[Long])
       else {
         val ageCutoff = System.currentTimeMillis() - olderThanMs
-        candidates.partition { v =>
-          fs.getFileStatus(new org.apache.hadoop.fs.Path(
-            logDir(root), commitName(v))).getModificationTime < ageCutoff
-        }
+        val mtime = listing.toMap
+        candidates.partition(v => mtime(v) < ageCutoff)
       }
     val survivors = vs.takeRight(keepLast) ++ protectedVs ++ ageProtected
     def uriPath(s: String) = uriPathOf(s)
@@ -4417,9 +4340,7 @@ object TableFormat {
       .toSet
     // phase 1: expire commit files (readers of surviving versions are
     // untouched — their commit files carry their complete file sets)
-    expired.foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(logDir(root), commitName(v)), false)
-    }
+    expired.foreach(log.delete)
     // phase 2: orphan sweep over the data dirs (recursive; the log dir is
     // never under a data dir by layout). The `_branch` subtree is SKIPPED
     // wholesale: a live WAP branch's staged data files are referenced
@@ -4431,7 +4352,8 @@ object TableFormat {
     def sweep(p: org.apache.hadoop.fs.Path): Unit =
       if (fs.exists(p)) fs.listStatus(p).foreach { st =>
         if (st.isDirectory) {
-          if (st.getPath.getName != "_log" && st.getPath.getName != "_branch")
+          if (!CommitLog.isLogDir(st.getPath.getName) &&
+              st.getPath.getName != "_branch")
             sweep(st.getPath)
         } else if ((st.getPath.getName.endsWith(".parquet") ||
             st.getPath.getName.endsWith(".rbm")) &&
@@ -4442,6 +4364,7 @@ object TableFormat {
         }
       }
     dataDirs.foreach(d => sweep(new org.apache.hadoop.fs.Path(d)))
+    log.sweepStaging(graceMs)
     (expired, removed.result())
   }
 
@@ -4570,7 +4493,7 @@ object TableFormat {
 
   /** Data files under a just-written parquet directory (one listing). */
   def listParquet(spark: SparkSession, dir: String): Seq[String] = {
-    val (_, fs, p) = fileContext(spark, dir)
+    val (fs, p) = fsOf(spark, dir)
     fs.listStatus(p).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(_.getPath.toString).sorted
@@ -4579,7 +4502,7 @@ object TableFormat {
   /** [[listParquet]] descending into subdirectories — what a
     * `partitionBy`-routed write produces ([[appendPartitioned]]). */
   def listParquetRecursive(spark: SparkSession, dir: String): Seq[String] = {
-    val (_, fs, p) = fileContext(spark, dir)
+    val (fs, p) = fsOf(spark, dir)
     val it = fs.listFiles(p, true)
     val out = Seq.newBuilder[String]
     while (it.hasNext) {

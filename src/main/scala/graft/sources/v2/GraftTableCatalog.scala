@@ -12,7 +12,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.operators.TableFormat
+import graft.operators.{CommitLog, TableFormat}
 
 /** SQL CATALOG over [[TableFormat]] tables — the `TableCatalog` plugin
   * that makes the format a first-class SQL citizen (the Delta/Iceberg
@@ -187,10 +187,6 @@ class GraftTableCatalog extends TableCatalog
   private def fsOf(p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
 
-  private def isTableDir(fs: org.apache.hadoop.fs.FileSystem,
-                         p: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(p, "_log"))
-
   override def listNamespaces(): Array[Array[String]] =
     listNamespaces(Array.empty)
 
@@ -203,7 +199,7 @@ class GraftTableCatalog extends TableCatalog
         namespace.toSeq)
     }
     fs.listStatus(base).filter(_.isDirectory)
-      .filter(st => !isTableDir(fs, st.getPath))
+      .filter(st => !CommitLog.isTable(fs, st.getPath))
       .filterNot(_.getPath.getName.startsWith("_"))
       .map(st => namespace :+ st.getPath.getName)
   }
@@ -212,7 +208,7 @@ class GraftTableCatalog extends TableCatalog
     if (namespace.isEmpty) return true
     val p = namespacePath(namespace)
     val fs = fsOf(p)
-    fs.exists(p) && !isTableDir(fs, p)
+    fs.exists(p) && !CommitLog.isTable(fs, p)
   }
 
   override def loadNamespaceMetadata(namespace: Array[String])
@@ -257,7 +253,7 @@ class GraftTableCatalog extends TableCatalog
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Array.empty
     else fs.listStatus(p).filter(_.isDirectory)
-      .filter(st => fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_log")))
+      .filter(st => CommitLog.isTable(fs, st.getPath))
       .map(st => Identifier.of(namespace, st.getPath.getName))
   }
 

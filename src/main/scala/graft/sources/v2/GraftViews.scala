@@ -17,13 +17,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   * Storage layout mirrors the catalog's namespace-as-directory rule
   * (`_views/<ns...>/<name>.json`); the underscore root keeps view
-  * documents out of table and namespace listings. Writes go through a
-  * temp file + rename so a crashed CREATE never leaves a half-written
-  * definition, and CREATE refuses an existing name (no silent replace
-  * outside `CREATE OR REPLACE`, which Spark routes through
-  * [[replaceView]]). Reference analog: the reference exposes each
-  * report as a saved GraphQL operation (`lib:947-1010`) — here the
-  * saved artifact is ANSI SQL in the engine's own catalog. */
+  * documents out of table and namespace listings. Writes are staged and
+  * renamed so a crashed CREATE never leaves a half-written definition,
+  * and CREATE refuses an existing name (no silent replace outside
+  * `CREATE OR REPLACE`, which Spark routes through [[replaceView]]).
+  * Reference analog: the reference exposes each report as a saved
+  * GraphQL operation (`lib:947-1010`) — here the saved artifact is ANSI
+  * SQL in the engine's own catalog. */
 private[v2] object GraftViews {
   private val mapper = new ObjectMapper()
 
@@ -35,41 +35,21 @@ private[v2] object GraftViews {
       (ident.namespace() :+ s"${ident.name()}.json")
         .mkString(s"$warehouse/_views/", "/", ""))
 
-  private def write(fs: org.apache.hadoop.fs.FileSystem,
-                    p: org.apache.hadoop.fs.Path, doc: String,
-                    replace: Boolean): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(
-      p.getParent, s".${p.getName}.${java.util.UUID.randomUUID()}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(doc.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (replace) {
-      // ATOMIC overwrite where the filesystem supports it: FileContext
-      // rename with OVERWRITE swaps the document in one namesystem op,
-      // so a concurrent SELECT resolving through ViewSubstitution never
-      // observes a missing file mid-replace. Filesystems without a
-      // FileContext binding (rare; some object-store shims) fall back to
-      // delete+rename — there the no-document window exists and a racing
-      // read can see a spurious NoSuchViewException. Note alter() above
-      // this layer is a read-modify-write with no lock: two concurrent
-      // SetProperty calls can lose one update (last writer wins) —
-      // views are low-churn metadata, so the race is documented rather
-      // than locked.
-      try {
-        org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
-          .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        return
-      } catch {
-        case _: UnsupportedOperationException |
-             _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-          fs.delete(p, false) // fallback: non-atomic replace window
-      }
-    }
-    if (!fs.rename(tmp, p)) {
-      fs.delete(tmp, false)
+  /** Publish a view document ([[graft.operators.CommitLog.publish]]):
+    * a create refuses an existing name; a replace swaps the document in
+    * one namesystem op, so a concurrent SELECT resolving through
+    * ViewSubstitution never observes a missing file mid-replace. Note
+    * alter() above this layer is a read-modify-write with no lock: two
+    * concurrent SetProperty calls can lose one update (last writer
+    * wins) — views are low-churn metadata, so the race is documented
+    * rather than locked. */
+  private def write(p: org.apache.hadoop.fs.Path, doc: String,
+                    replace: Boolean): Unit =
+    if (!graft.operators.CommitLog.publish(
+        SparkSession.active.sparkContext.hadoopConfiguration, p, p.getParent,
+        _.write(doc.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
+        overwrite = replace))
       throw new IllegalStateException(s"graft views: lost a create race at $p")
-    }
-  }
 
   private def render(ident: Identifier, sql: String, currentCatalog: String,
                      currentNamespace: Array[String], schema: StructType,
@@ -167,12 +147,10 @@ private[v2] object GraftViews {
 
   def create(warehouse: String, info: ViewInfo, replace: Boolean): View = {
     val p = viewPath(warehouse, info.ident())
-    val fs = fsOf(p)
-    if (!replace && fs.exists(p))
+    if (!replace && fsOf(p).exists(p))
       throw new org.apache.spark.sql.catalyst.analysis
         .ViewAlreadyExistsException(info.ident())
-    fs.mkdirs(p.getParent)
-    write(fs, p, render(info.ident(), info.sql(), info.currentCatalog(),
+    write(p, render(info.ident(), info.sql(), info.currentCatalog(),
       info.currentNamespace(), info.schema(), info.queryColumnNames(),
       info.columnAliases(), info.columnComments(), info.properties()),
       replace)
@@ -192,7 +170,7 @@ private[v2] object GraftViews {
         s"graft views: unsupported ALTER VIEW change $c")
     }
     val p = viewPath(warehouse, ident)
-    write(fsOf(p), p, render(ident, v.query, v.currentCatalog,
+    write(p, render(ident, v.query, v.currentCatalog,
       v.currentNamespace, v.schema, v.queryColumnNames, v.columnAliases,
       v.columnComments, props), replace = true)
     load(warehouse, ident)

@@ -20,6 +20,15 @@ OUT=/tmp/preflight_verify
 echo "== preflight: compile =="
 sbt -batch compile
 
+echo "== preflight: commit-log layout and staged publish live in CommitLog.scala =="
+# every versioned log and staged single-file publish goes through
+# graft.operators.CommitLog; Streams' directory swaps are a separate
+# single-writer protocol
+if grep -rnE 'v%020d|Rename\.OVERWRITE|\.tmp"' src/main --include='*.scala' \
+    | grep -vE '^src/main/scala/graft/(operators/CommitLog|streaming/Streams)\.scala:'; then
+  echo "PREFLIGHT FAIL: commit-log protocol copied outside CommitLog.scala (lines above)"; exit 1
+fi
+
 echo "== preflight: full Verify at $SF_VERIFY =="
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify $SF_VERIFY $OUT" 2>&1 \
