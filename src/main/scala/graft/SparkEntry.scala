@@ -4302,7 +4302,7 @@ object SparkEntry {
     // metadata layer: a Transactions-shaped table (date + timestamp
     // columns, the reference's data model — `v3:139-179` ISO date keys)
     // commits with DATE ZONE STATS, rides the SQL catalog through the
-    // custom row reader (typed round-trip graded), PRUNES FILES from a
+    // vectorized catalog scan (typed round-trip graded), PRUNES FILES from a
     // DATE predicate (the PrunedFiles ledger replayed by bucket
     // arithmetic), and streams through graft-table-changes with the
     // same typed values ----
@@ -4934,7 +4934,7 @@ object SparkEntry {
     // reference's own data model, `lib:1470-1504` tags[]/category{})
     // lives in the SQL catalog. CTAS + INSERT write the nested columns
     // through the DSv2 writer (standard 3-level parquet LIST), the
-    // catalog's vectorized/row readers decode them back (the explode
+    // catalog's vectorized reader decodes them back (the explode
     // probe's plan advertises Columnar: true — graded), and the null
     // shapes (null struct, empty array, null array, chosen by modular
     // rules) round-trip exactly; the oracle replays from the FLATTENED
@@ -5074,10 +5074,10 @@ object SparkEntry {
     // amplification dial driven END-TO-END from SQL — INSERT, two MoR
     // delete manifests, then CALL graft.system.compact_manifests (pure
     // metadata merge, ledger graded) and CALL graft.system.compact; the
-    // pinned MoR version plans the masked ROW reader with the metadata-
-    // aggregate pushdown honestly refused, the compacted head restores
-    // Columnar: true AND the commit-stats count(*) pushdown — both plan
-    // flags are oracle columns ----
+    // pinned MoR version plans the masked columnar scan with the
+    // metadata-aggregate pushdown honestly refused, the compacted head
+    // restores the commit-stats count(*) pushdown — both plan flags are
+    // oracle columns ----
     "q126_sql_maintenance" -> { (s, dir) =>
       val wh = s"${sys.props("java.io.tmpdir")}/graft_scratch/q104_wh"
       val tbl = s"mnt_${java.lang.Integer.toHexString(dir.hashCode)}"
@@ -13094,7 +13094,7 @@ object SparkEntry {
     // probe [dmin+w, dmin+2w-2] lies strictly inside bucket 1's day
     // range, so the PrunedFiles ledger is per-bucket min/max overlap
     // arithmetic; d_min/d_max grade the DATE round-trip through the
-    // custom readers, ts_sec_sum the TIMESTAMP one (midnight
+    // catalog scan and the stream, ts_sec_sum the TIMESTAMP one (midnight
     // construction makes it exactly 86400 x day-number per row)
     "q113_sql_dates" ->
       """WITH s AS (SELECT o_orderkey AS k, CAST(o_orderdate AS DATE) AS dt,

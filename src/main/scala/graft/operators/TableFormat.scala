@@ -1137,8 +1137,8 @@ object TableFormat {
   //   coldefault.exist.c — EXISTS_DEFAULT: the folded literal files
   //                        written BEFORE `c` existed read back (frozen
   //                        at ADD COLUMN; never retroactive).
-  // No custom reader code: Spark's vectorized and row parquet readers
-  // both back-fill missing columns from EXISTS_DEFAULT metadata, and
+  // No reader code of our own: Spark's vectorized and row parquet
+  // readers both back-fill missing columns from EXISTS_DEFAULT metadata, and
   // the analyzer fills INSERT gaps from CURRENT_DEFAULT — by-name file
   // resolution makes "missing in the file" exactly "pre-born".
 
@@ -1336,15 +1336,6 @@ object TableFormat {
   private def anyLineage(files: Seq[FileStat]): Boolean =
     files.exists(f => f.rid >= 0 || f.ridCol)
 
-  /** Add-only schema union, RECURSIVE through nested types: top-level
-    * columns of `next` not in `cur` are appended in `next`'s order, and
-    * a STRUCT present in both (directly, as an array element, or as a
-    * map value) may gain NEW members — appended after the existing ones,
-    * forced nullable, because rows written before the member existed
-    * null-fill it by name at every nesting level (both the custom
-    * readers and Spark's native parquet reader do). Anything else —
-    * leaf type changes, member drops, map KEY changes — needs a rewrite
-    * (out of the minimal sound form, as in early Iceberg v1 readers). */
   /** SAFE TYPE WIDENING lattice (the Iceberg promotion matrix): the
     * wider of two integral types, the wider of float/double, and
     * same-scale decimal precision growth (capped at 18 — the catalog
@@ -1352,8 +1343,8 @@ object TableFormat {
     * type change, which still needs a rewrite). Sound because parquet
     * readers up-convert at read time — Spark's native vectorized and
     * row-based readers both read INT32 pages under a BIGINT schema
-    * (and FLOAT under DOUBLE), and the engine's custom row reader
-    * resolves its converters against the file's own physical type. */
+    * (and FLOAT under DOUBLE), and every connector read goes through
+    * the vectorized one. */
   private[graft] def widened(a: org.apache.spark.sql.types.DataType,
                              b: org.apache.spark.sql.types.DataType)
       : Option[org.apache.spark.sql.types.DataType] = {
@@ -1374,6 +1365,15 @@ object TableFormat {
     }
   }
 
+  /** Add-only schema union, RECURSIVE through nested types: top-level
+    * columns of `next` not in `cur` are appended in `next`'s order, and
+    * a STRUCT present in both (directly, as an array element, or as a
+    * map value) may gain NEW members — appended after the existing ones,
+    * forced nullable, because rows written before the member existed
+    * null-fill it by name at every nesting level (Spark's parquet
+    * reader does). Anything else — leaf type changes, member drops, map
+    * KEY changes — needs a rewrite (out of the minimal sound form, as in
+    * early Iceberg v1 readers). */
   def evolveSchema(cur: org.apache.spark.sql.types.StructType,
                    next: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.types.StructType = {

@@ -3,7 +3,9 @@ package graft.sources
 import java.io.FileNotFoundException
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
@@ -46,6 +48,16 @@ object Parquet {
 
   /** `spark.read.parquet(paths).schema`, partition columns included. */
   def schema(spark: SparkSession, paths: String*): StructType = read(spark, paths: _*).schema
+
+  /** Total rows of the parquet `files`, from their footers on the driver
+    * (no job). */
+  def rowCount(spark: SparkSession, files: Seq[String]): Long = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    files.map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), hadoopConf))
+      try r.getRecordCount finally r.close()
+    }.sum
+  }
 
   /** The data schema Spark's inference would give `paths`, or None where
     * [[read]] falls back. */

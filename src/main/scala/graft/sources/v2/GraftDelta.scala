@@ -163,7 +163,7 @@ private class GraftDeltaScan(snap: TableFormat.Snapshot,
     val c = GraftSqlColumnar.scanConf(SparkSession.active)
     c.set(org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
       .SPARK_ROW_REQUESTED_SCHEMA, extended.json)
-    new GraftSqlReaderFactory(required, extended, columnar = true,
+    new GraftSqlReaderFactory(required, extended,
       new SerializableHadoopConf(c))
   }
 

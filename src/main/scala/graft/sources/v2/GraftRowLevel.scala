@@ -80,9 +80,9 @@ private[v2] object GraftRowLevel {
 
   /** The row's FILE-ABSOLUTE ordinal (pre-mask — masked rows count), the
     * second half of the `(_file, _pos)` row identity delta-based
-    * row-level operations anchor deletion vectors on. Serving it forces
-    * the row reader with an unfiltered open: a skipped row group would
-    * desynchronize the ordinal count. */
+    * row-level operations anchor deletion vectors on. It is served as a
+    * synthesized vector over an unfiltered open: a skipped row group
+    * would desynchronize the ordinal count. */
   val PosColumn = "_pos"
 
   val PosMetadataColumn: MetadataColumn = new MetadataColumn {
@@ -190,14 +190,13 @@ private class GraftRowLevelScan(op: GraftRowLevelOperation,
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // the SHARED columnar factory (r14): the copy-on-write target scan
-    // feeds WholeStageCodegen batches with `_file` synthesized as a
-    // constant vector per partition — a CoW MERGE over wide tables no
-    // longer pays the row-by-row reader
+    // the SHARED columnar factory: the copy-on-write target scan feeds
+    // WholeStageCodegen batches with `_file` synthesized as a constant
+    // vector per partition
     val c = GraftSqlColumnar.scanConf(SparkSession.active)
     c.set(org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
       .SPARK_ROW_REQUESTED_SCHEMA, extended.json)
-    new GraftSqlReaderFactory(required, extended, columnar = true,
+    new GraftSqlReaderFactory(required, extended,
       new SerializableHadoopConf(c))
   }
 

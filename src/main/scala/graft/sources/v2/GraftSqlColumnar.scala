@@ -3,38 +3,40 @@ package graft.sources.v2
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.read.PartitionReader
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.execution.vectorized.{ColumnVectorUtils, ConstantColumnVector}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
-/** VECTORIZED read path for the SQL catalog — the answer to "a custom
-  * reader must not cost Spark its columnar parquet scan at 100 TB":
-  * files are read through Spark's own `VectorizedParquetRecordReader`,
-  * so the catalog scan feeds WholeStageCodegen `ColumnarBatch`es
-  * exactly like a native `spark.read.parquet`, instead of
-  * materializing one `InternalRow` per row in the connector. Since r13
-  * MERGE-ON-READ-pending snapshots stay columnar too: a masked
-  * partition loads its manifest keys into a hash set, computes the
-  * surviving row ids per batch, and serves the batch through
-  * [[MappedColumnVector]] row-id remapping (the Iceberg
-  * vectorized-equality-delete shape) — the key column is read
-  * scan-uniformly (appended to the projection when absent) and only
-  * the projected prefix is emitted. Compaction still pays by removing
-  * the per-batch mask work; the row reader remains only for the
-  * `_file` metadata projection (row-level op plumbing).
+/** The connector's ONE parquet read path: every file the SQL catalog
+  * scan, the copy-on-write and delta row-level scans, the
+  * `graft-table-changes` stream and the delete-manifest key loads read
+  * goes through Spark's own `VectorizedParquetRecordReader`, so each
+  * feeds WholeStageCodegen `ColumnarBatch`es exactly like a native
+  * `spark.read.parquet`, and Spark's parquet type rules (INT96 and
+  * timestamp units, decimal encodings, legacy LIST forms, INT32 under
+  * BIGINT and FLOAT under DOUBLE) are the only ones applied.
+  * MERGE-ON-READ-pending snapshots stay columnar: a masked partition
+  * loads its manifest keys into a hash set, computes the surviving row
+  * ids per batch, and serves the batch through [[MappedColumnVector]]
+  * row-id remapping (the Iceberg vectorized-equality-delete shape) —
+  * the key column is read scan-uniformly (appended to the projection
+  * when absent) and only the projected prefix is emitted. Metadata
+  * columns are synthesized as vectors: per-partition constants
+  * (`_file`, the stream's `_commit_version`), `_pos` and `_row_id`.
   *
   * The delegate is initialized through the PRODUCTION
   * `initialize(InputSplit, TaskAttemptContext)` path with the SESSION's
   * Hadoop configuration (not the test-only `initialize(path, columns)`
   * overload, which builds a bare `new Configuration()` internally and
   * would strand fs.* settings — S3A/ABFS credentials, endpoints — that
-  * the footer read and the row reader already honor). That path also
-  * buys SCHEMA EVOLUTION natively: `ParquetReadSupport` clips the
-  * requested Catalyst schema against the file's own schema and the
-  * reader null-pads columns the file predates — the same back-fill
-  * contract as the row reader, with no wrapper batch.
+  * the footer read honors). That path also buys SCHEMA EVOLUTION
+  * natively: `ParquetReadSupport` clips the requested Catalyst schema
+  * against the file's own schema and the reader null-pads columns the
+  * file predates, with no wrapper batch.
   *
   * One case is layered on top: an EMPTY PROJECTION (`SELECT count(*)`)
   * — parquet group types cannot be empty, so a zero-column scan emits
@@ -66,10 +68,18 @@ private[v2] object GraftSqlColumnar {
   }
 }
 
+/** A reader factory whose partitions are all served by
+  * [[GraftSqlColumnarReader]]: Spark asks it for batches only, never rows. */
+private[v2] trait GraftColumnarReaderFactory extends PartitionReaderFactory {
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("graft: parquet partitions are read columnar")
+}
+
 /** PARQUET ROW-GROUP predicate pushdown — the translation from pushed
   * DSv2 filters to parquet `FilterApi` predicates, stamped on the scan
-  * conf so BOTH reader paths skip non-matching row groups via footer
-  * stats (`ParquetFileReader` applies the stats + dictionary filters at
+  * conf so the reader skips non-matching row groups via footer stats
+  * (`ParquetFileReader` applies the stats + dictionary filters at
   * open; the zone arithmetic prunes FILES, this prunes INSIDE the
   * surviving files — at 100 TB with ~1 GB files a selective key probe
   * stops re-reading whole files for one hit row group).
@@ -79,12 +89,11 @@ private[v2] object GraftSqlColumnar {
   * binary-string), so the typed predicate matches the physical column
   * in every file the format's own writers produced. A FOREIGN file that
   * stored the column differently (e.g. an INT96 timestamp) makes the
-  * reader's open throw a schema-compatibility error — both readers
-  * catch exactly that case and retry the file WITHOUT the filter
+  * reader's open throw a schema-compatibility error — the reader
+  * catches exactly that case and retries the file WITHOUT the filter
   * (correctness never depends on the pushdown; Spark's residual filter
-  * re-applies row-level either way). Record-level and column-index
-  * filtering stay DISABLED: the readers assume whole row groups
-  * surface, and row-group granularity is the 100 TB lever. */
+  * re-applies row-level either way). Record-level filtering stays
+  * DISABLED: Spark's residual filter does the row-level work. */
 private[v2] object GraftRowGroupFilter {
   import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
   import org.apache.spark.sql.sources._
@@ -184,23 +193,20 @@ private[v2] object GraftRowGroupFilter {
     preds.reduceOption(FilterApi.and)
   }
 
-  /** Stamp `pred` for the readers: the predicate itself plus the
+  /** Stamp `pred` for the reader: the predicate itself plus the
     * filtering levels — stats + dictionary ON (row-group granularity),
     * record-level OFF (surviving pages surface whole; Spark's residual
-    * filter does the row-level work). COLUMN-INDEX filtering rides the
-    * `columnIndex` flag: ON for the vectorized path, whose delegate
-    * (Spark's `VectorizedParquetRecordReader`) natively reads filtered
-    * row ranges — a point probe inside a 128 MB row group then reads
-    * ~one PAGE instead of the whole group, the sub-row-group IO lever —
-    * and OFF for the row reader, which iterates unfiltered row groups
-    * and would gain nothing from index-trimmed page stores. */
+    * filter does the row-level work), and COLUMN-INDEX ON: Spark's
+    * `VectorizedParquetRecordReader` natively reads filtered row ranges,
+    * so a point probe inside a 128 MB row group reads ~one PAGE instead
+    * of the whole group, the sub-row-group IO lever. */
   def stamp(c: org.apache.hadoop.conf.Configuration,
-            pred: FilterPredicate, columnIndex: Boolean = false): Unit = {
+            pred: FilterPredicate): Unit = {
     org.apache.parquet.hadoop.ParquetInputFormat.setFilterPredicate(c, pred)
     c.setBoolean(org.apache.parquet.hadoop.ParquetInputFormat
       .RECORD_FILTERING_ENABLED, false)
     c.setBoolean(org.apache.parquet.hadoop.ParquetInputFormat
-      .COLUMN_INDEX_FILTERING_ENABLED, columnIndex)
+      .COLUMN_INDEX_FILTERING_ENABLED, true)
   }
 
   private val PredicateKey =
@@ -223,10 +229,9 @@ private[v2] object GraftRowGroupFilter {
 }
 
 /** Row-id-remapping wrapper over a delegate [[ColumnVector]] — what
-  * lets a merge-on-read mask apply OVER a vectorized batch instead of
-  * degrading the scan to the row reader (the Iceberg vectorized
-  * equality-delete shape): the reader computes the surviving row ids
-  * once per batch into `state.map`, and every wrapped vector (and,
+  * lets a merge-on-read mask apply OVER a vectorized batch (the Iceberg
+  * vectorized equality-delete shape): the reader computes the surviving
+  * row ids once per batch into `state.map`, and every wrapped vector (and,
   * recursively, its struct children — [[ColumnarRow]] accessors read
   * children at the PARENT's row id) translates through it. The
   * delegate's vectors are reused across batches, so the wrappers are
@@ -263,36 +268,6 @@ private class MappedColumnVector(base: ColumnVector, state: MaskState)
   override def getChild(ordinal: Int): ColumnVector =
     children.computeIfAbsent(ordinal,
       (_: Integer) => new MappedColumnVector(base.getChild(ordinal), state))
-}
-
-/** A constant-string vector — the `_file` metadata column synthesized
-  * per partition on the COLUMNAR path (every row of a partition shares
-  * its source path, so the vector is one shared UTF8String). */
-private class ConstStringVector(value: org.apache.spark.unsafe.types.UTF8String)
-    extends ColumnVector(StringType) {
-  override def close(): Unit = ()
-  override def hasNull: Boolean = false
-  override def numNulls: Int = 0
-  override def isNullAt(i: Int): Boolean = false
-  override def getUTF8String(i: Int) = value
-  override def getBoolean(i: Int): Boolean =
-    throw new UnsupportedOperationException
-  override def getByte(i: Int): Byte = throw new UnsupportedOperationException
-  override def getShort(i: Int): Short = throw new UnsupportedOperationException
-  override def getInt(i: Int): Int = throw new UnsupportedOperationException
-  override def getLong(i: Int): Long = throw new UnsupportedOperationException
-  override def getFloat(i: Int): Float = throw new UnsupportedOperationException
-  override def getDouble(i: Int): Double = throw new UnsupportedOperationException
-  override def getArray(i: Int): org.apache.spark.sql.vectorized.ColumnarArray =
-    throw new UnsupportedOperationException
-  override def getMap(i: Int): org.apache.spark.sql.vectorized.ColumnarMap =
-    throw new UnsupportedOperationException
-  override def getDecimal(i: Int, p: Int, s: Int) =
-    throw new UnsupportedOperationException
-  override def getBinary(i: Int): Array[Byte] =
-    throw new UnsupportedOperationException
-  override def getChild(ordinal: Int): ColumnVector =
-    throw new UnsupportedOperationException
 }
 
 /** The `_pos` metadata column on the COLUMNAR path: the row's
@@ -395,12 +370,15 @@ private class GraftSqlColumnarReader(file: String, required: StructType,
                                      conf: org.apache.hadoop.conf.Configuration,
                                      posMask: org.roaringbitmap.longlong.Roaring64Bitmap = null,
                                      rid: Long = -1L,
-                                     ridColRead: Boolean = false)
+                                     ridColRead: Boolean = false,
+                                     constants: Map[String, Any] = Map.empty)
     extends PartitionReader[ColumnarBatch] {
   // `posMask` is the file's DELETION VECTOR (file-absolute ordinals),
   // and a `_pos` projection synthesizes the same ordinals as a column.
   // The factory hands a FILTER-FREE conf with either — a stamped
   // row-group predicate would skip groups and desynchronize the count.
+  // `constants` are per-partition constant columns by name, as internal
+  // values (`_file`, the stream's `_commit_version`).
   require((posMask == null &&
     !required.fieldNames.contains(GraftRowLevel.PosColumn) &&
     !required.fieldNames.contains(GraftRowLevel.RowIdColumn)) ||
@@ -466,11 +444,11 @@ private class GraftSqlColumnarReader(file: String, required: StructType,
     }
 
   // output slot -> source: >= 0 is the delegate (extended) column index,
-  // -1 synthesizes `_file`, -2 synthesizes `_pos`, -3 the `_row_id`
+  // -1 a per-partition constant, -2 synthesizes `_pos`, -3 the `_row_id`
   // lineage value (materialized id column when this file carries one —
   // read as the delegate's appended LAST column — else rid + ordinal)
   private val outputs: Array[Int] = required.fields.map { f =>
-    if (f.name == GraftRowLevel.FileColumn) -1
+    if (constants.contains(f.name)) -1
     else if (f.name == GraftRowLevel.PosColumn) -2
     else if (f.name == GraftRowLevel.RowIdColumn) -3
     else extended.fieldIndex(f.name)
@@ -483,17 +461,16 @@ private class GraftSqlColumnarReader(file: String, required: StructType,
   private lazy val keyIdx = extended.fieldIndex(keyCol)
   private lazy val keyIsLong =
     extended.fields(keyIdx).dataType == org.apache.spark.sql.types.LongType
-  private lazy val fileVec = new ConstStringVector(
-    org.apache.spark.unsafe.types.UTF8String.fromString(file))
 
   private var countBatch: ColumnarBatch = _
   private var current: ColumnarBatch = _
-  // lazily-built output shells (delegate vectors are reused per batch,
-  // so these allocate once): `shell` projects/synthesizes over a clean
-  // batch, `maskState`+`maskedBatch` additionally apply the row-id map
+  // the output shell, built once on the first non-identity batch
+  // (delegate vectors are reused per batch): delegate columns by index
+  // — row-id remapped through `maskState` under a mask — and the
+  // synthesized columns
   private var shell: ColumnarBatch = _
+  private val masked = mask != null || posMask != null
   private val maskState = new MaskState
-  private var maskedBatch: ColumnarBatch = _
 
   // `batchBase` holds the CURRENT emitted batch's first raw ordinal —
   // the synthesized OrdinalVectors read it while Spark consumes the
@@ -503,35 +480,36 @@ private class GraftSqlColumnarReader(file: String, required: StructType,
   private val batchBase = new BatchBase
   private var nextBase = 0L
 
+  private def shellOf(b: ColumnarBatch): ColumnarBatch = {
+    // surviving rows keep their RAW ordinals (base + map(i)) — exactly
+    // the identity a deletion vector anchors on
+    val state = if (masked) maskState else null
+    new ColumnarBatch(outputs.indices.map { o =>
+      outputs(o) match {
+        case -1 =>
+          val f = required.fields(o)
+          val c = new ConstantColumnVector(1, f.dataType)
+          ColumnVectorUtils.populate(c, InternalRow(constants(f.name)), 0)
+          c: ColumnVector
+        case -2 => new OrdinalVector(batchBase, state)
+        case -3 => new RowIdVector(batchBase, state, rid, idColOf(b))
+        case i if masked => new MappedColumnVector(b.column(i), maskState)
+        case i => b.column(i)
+      }
+    }.toArray)
+  }
+
   private def emit(b: ColumnarBatch): ColumnarBatch = {
+    val rows = b.numRows()
     batchBase.value = nextBase
-    batchBase.rows = b.numRows() // masked path overwrites with kept count
-    nextBase += b.numRows()
-    val base = batchBase.value
-    if (mask == null && posMask == null) {
-      val out =
-        if (identityOutputs) b
-        else {
-          // projection shell: delegate columns by index, `_file`/`_pos`
-          // synthesized (a clean batch's ordinals are base + i)
-          if (shell == null)
-            shell = new ColumnarBatch(outputs.map {
-              case -1 => fileVec: ColumnVector
-              case -2 => new OrdinalVector(batchBase, null): ColumnVector
-              case -3 =>
-                new RowIdVector(batchBase, null, rid, idColOf(b)): ColumnVector
-              case i => b.column(i)
-            })
-          shell.setNumRows(b.numRows())
-          shell
-        }
-      out
-    } else {
-      val rows = b.numRows()
+    nextBase += rows
+    var n = rows
+    if (masked) {
+      val base = batchBase.value
       val keys = if (mask == null) null else b.column(keyIdx)
       if (maskState.map == null || maskState.map.length < rows)
         maskState.map = new Array[Int](rows)
-      var n = 0
+      n = 0
       var i = 0
       while (i < rows) {
         // deletion vector: skip by file-absolute ordinal; equality
@@ -542,19 +520,13 @@ private class GraftSqlColumnarReader(file: String, required: StructType,
         if (keep) { maskState.map(n) = i; n += 1 }
         i += 1
       }
-      if (maskedBatch == null)
-        maskedBatch = new ColumnarBatch(outputs.map {
-          case -1 => fileVec: ColumnVector
-          // surviving rows keep their RAW ordinals (base + map(i)) —
-          // exactly the identity a deletion vector anchors on
-          case -2 => new OrdinalVector(batchBase, maskState): ColumnVector
-          case -3 => new RowIdVector(batchBase, maskState, rid,
-            idColOf(b)): ColumnVector
-          case i => new MappedColumnVector(b.column(i), maskState): ColumnVector
-        })
-      batchBase.rows = n
-      maskedBatch.setNumRows(n)
-      maskedBatch
+    }
+    batchBase.rows = n
+    if (!masked && identityOutputs) b
+    else {
+      if (shell == null) shell = shellOf(b)
+      shell.setNumRows(n)
+      shell
     }
   }
 

@@ -28,8 +28,9 @@ import graft.operators.TableFormat
   *    sinks and maintenance exactly like any other committer.
   *
   * Files are written with explicit logical types (DATE, TIMESTAMP-micros,
-  * DECIMAL-int64) so the catalog's own row reader, the streaming source
-  * and Spark's vectorized scan all read them back identically. */
+  * DECIMAL-int64), which Spark's vectorized reader — the catalog scan
+  * and the streaming source alike — reads back under the committed
+  * schema. */
 private[v2] object GraftSqlWrite {
   /** Table property capping one data file's size (Iceberg's
     * `write.target-file-size-bytes`): the executor writer ROLLS to a
@@ -412,7 +413,7 @@ private class GraftSqlWriterFactory(dataDir: String, schema: StructType,
 }
 
 /** Executor-side InternalRow → parquet writer over the parquet example
-  * Group API (the mirror of [[ParquetRowReader]]). Files are created
+  * Group API. Files are created
   * lazily on the first row, so empty partitions contribute nothing to
   * the commit. Under a partition spec the writer ROLLS on the monotone
   * (identity/month/div) half of the routing key and keeps a

@@ -1999,16 +1999,6 @@ private class GraftSqlScan(snap: TableFormat.Snapshot, required: StructType,
     runtimeKeep = keep.result()
   }
 
-  /** Columnar ALWAYS (r14): masks apply per batch through the row-id
-    * mapping (the Iceberg vectorized-equality-delete shape,
-    * [[MappedColumnVector]]), deletion vectors skip by batch ordinal,
-    * and since r14 the `_file`/`_pos` METADATA columns synthesize as
-    * vectors too ([[ConstStringVector]]/[[OrdinalVector]]) — so even
-    * the delta (merge-on-read) row-level scans feed WholeStageCodegen
-    * `ColumnarBatch`es. The custom row reader remains only for
-    * changelog/manifest plumbing. */
-  private lazy val columnar = true
-
   /** True when any surviving file has an applicable manifest — the scan
     * then reads the KEY column alongside the projection (appended when
     * not already projected) so the columnar mask can probe it; the
@@ -2031,7 +2021,7 @@ private class GraftSqlScan(snap: TableFormat.Snapshot, required: StructType,
     s"graft(${snap.root}@v${snap.version}) PrunedFiles: " +
       s"${snap.files.size - hit.size}/${snap.files.size}, " +
       s"RuntimeFiltered: ${planHit.size - hit.size}/${planHit.size}, " +
-      s"Columnar: $columnar, Bounds: " +
+      s"Columnar: true, Bounds: " +
       bounds.toSeq.sortBy(_._1).map { case (c, (lo, hi)) => s"$c in [$lo,$hi]" }
         .mkString("[", ", ", "]") +
       s", Pruners: ${pruners.map(_._1).sorted.mkString("[", ", ", "]")}" +
@@ -2045,7 +2035,7 @@ private class GraftSqlScan(snap: TableFormat.Snapshot, required: StructType,
 
   override def toBatch: Batch = this
 
-  /** The row-group-level `FilterApi` predicate stamped for the readers
+  /** The row-group-level `FilterApi` predicate stamped for the reader
     * — built from the pushed discrete-column filters ONLY when the scan
     * projects at least one column (a zero-column count(*) scan answers
     * from footer row counts and must never see a filter). */
@@ -2135,21 +2125,22 @@ private class GraftSqlScan(snap: TableFormat.Snapshot, required: StructType,
 
   override def createReaderFactory(): PartitionReaderFactory = {
     // scanConf stamps the parquet conversion settings the vectorized
-    // delegate reads from the task conf (harmless for the row reader);
-    // the requested schema is scan-constant, so it stamps HERE — one
-    // Configuration for the whole scan, never a per-file copy
+    // delegate reads from the task conf; the requested schema is
+    // scan-constant, so it stamps HERE — one Configuration for the
+    // whole scan, never a per-file copy
     val c = GraftSqlColumnar.scanConf(SparkSession.active)
     c.set(org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
       .SPARK_ROW_REQUESTED_SCHEMA, extendedSchema.json)
-    // column-index (page-level) trimming only on the vectorized path,
-    // which reads filtered row ranges natively
-    rowGroupFilter.foreach(GraftRowGroupFilter.stamp(c, _, columnar))
-    new GraftSqlReaderFactory(required, extendedSchema, columnar,
+    rowGroupFilter.foreach(GraftRowGroupFilter.stamp(c, _))
+    new GraftSqlReaderFactory(required, extendedSchema,
       new SerializableHadoopConf(c))
   }
 }
 
 private object GraftSqlReaderFactory {
+  /** A delete manifest's one column. */
+  private val ManifestSchema = StructType(Seq(StructField("_del_key", LongType)))
+
   private def isSynth(n: String): Boolean =
     n == GraftRowLevel.FileColumn || n == GraftRowLevel.PosColumn ||
       n == GraftRowLevel.RowIdColumn
@@ -2175,19 +2166,40 @@ private object GraftSqlReaderFactory {
 }
 
 private class GraftSqlReaderFactory(required: StructType,
-                                    extended: StructType, columnar: Boolean,
+                                    extended: StructType,
                                     conf: SerializableHadoopConf)
-    extends PartitionReaderFactory {
-  import GraftSqlReaderFactory.isSynth
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnar
+    extends GraftColumnarReaderFactory {
+  import GraftSqlReaderFactory.ManifestSchema
 
+  /** The manifest read's conf, one copy per task: the manifest schema,
+    * and NEVER the scan's stamped row-group predicate — a data-column
+    * filter would drop `_del_key` row groups and the emptied mask would
+    * resurrect deleted rows. */
+  @transient private lazy val manifestConf = {
+    val c = GraftRowGroupFilter.without(conf.value)
+    c.set(org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+      .SPARK_ROW_REQUESTED_SCHEMA, ManifestSchema.json)
+    c
+  }
+
+  /** The partition's delete-manifest keys in one hash set — memory
+    * O(manifest keys); manifest compaction is the dial that bounds it. */
   private def maskOf(p: GraftPartition): java.util.HashSet[java.lang.Long] =
     if (p.manifests.isEmpty) null
     else {
       val m = new java.util.HashSet[java.lang.Long]()
-      p.manifests.foreach(f =>
-        m.addAll(ParquetRowReader.readLongColumn(f, "_del_key", conf.value)))
+      p.manifests.foreach { f =>
+        val r = new GraftSqlColumnarReader(f, ManifestSchema, ManifestSchema,
+          null, null, manifestConf)
+        try while (r.next()) {
+          val keys = r.get().column(0)
+          var i = 0
+          while (i < r.get().numRows()) {
+            if (!keys.isNullAt(i)) m.add(keys.getLong(i))
+            i += 1
+          }
+        } finally r.close()
+      }
       m
     }
 
@@ -2241,11 +2253,16 @@ private class GraftSqlReaderFactory(required: StructType,
     else base
   }
 
+  // the _file METADATA column (row-level op plumbing) is per partition
+  // — per MEMBER FILE under a packed partition (each chained sub-reader
+  // carries its own)
   private def columnarReaderOf(p: GraftPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new GraftSqlColumnarReader(p.file, required, extended, maskOf(p),
       p.keyCol, confFor(p), posMaskOf(p), p.rid,
-      ridColRead = needsRowId && p.ridCol)
+      ridColRead = needsRowId && p.ridCol,
+      constants = Map(GraftRowLevel.FileColumn ->
+        org.apache.spark.unsafe.types.UTF8String.fromString(p.file)))
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
@@ -2253,45 +2270,6 @@ private class GraftSqlReaderFactory(required: StructType,
       case pk: GraftSqlPackedPartition =>
         new GraftChainedReader(pk.subs, columnarReaderOf)
       case p: GraftPartition => columnarReaderOf(p)
-    }
-
-  private def rowReaderOf(p: GraftPartition)
-      : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
-    require(!needsRowId,
-      "graft: the _row_id projection is served by the columnar path only")
-    val mask = maskOf(p)
-    // the _file METADATA column (SELECT _file FROM graft.t, row-level
-    // op plumbing) synthesizes per partition — per MEMBER FILE under a
-    // packed partition (each chained sub-reader carries its own)
-    val synth: Map[String, Any] =
-      if (required.fieldNames.contains(GraftRowLevel.FileColumn))
-        Map(GraftRowLevel.FileColumn ->
-          org.apache.spark.unsafe.types.UTF8String.fromString(p.file))
-      else Map.empty
-    // era-resolved names for an old-era file of a mapped table: the
-    // partition's physical schema covers `extended` (real columns) —
-    // each real required field resolves to its physical name by
-    // extended position; synth fields (_file/_pos) pass through (the
-    // row reader synthesizes them, they are never mapped)
-    val physRequired = p.physSchemaJson match {
-      case Some(js) =>
-        val phys = org.apache.spark.sql.types.DataType.fromJson(js)
-          .asInstanceOf[StructType]
-        StructType(required.fields.map(f =>
-          if (isSynth(f.name)) f
-          else phys.fields(extended.fieldIndex(f.name))))
-      case None => required
-    }
-    new ParquetRowReader(p.file, physRequired, confFor(p), synth = synth,
-      mask = mask, keyCol = p.keyCol, posMask = posMaskOf(p),
-      posCol = if (needsPos) GraftRowLevel.PosColumn else null)
-  }
-
-  override def createReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
-    partition match {
-      case pk: GraftSqlPackedPartition =>
-        new GraftChainedReader(pk.subs, rowReaderOf)
-      case p: GraftPartition => rowReaderOf(p)
     }
 }
 

@@ -76,14 +76,14 @@ private[v2] object GraftViews {
     mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)
   }
 
-  private def parse(name: String, doc: String): View = new View {
+  private def parse(viewName: String, doc: String): View = new View {
     private val node = mapper.readTree(doc)
     private def strings(field: String): Array[String] = {
       val n = node.get(field)
       if (n == null) Array.empty
       else (0 until n.size()).map(i => n.get(i).asText()).toArray
     }
-    override val name: String = name
+    override val name: String = viewName
     override val query: String = node.get("sql").asText()
     override val currentCatalog: String = node.get("currentCatalog").asText()
     override val currentNamespace: Array[String] = strings("currentNamespace")

@@ -3,14 +3,14 @@ package graft.sources.v2
 import java.util.{Map => JMap}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import graft.operators.TableFormat
 
@@ -48,12 +48,12 @@ import graft.operators.TableFormat
   * consumer grade exactly which commit produced which rows. Schema
   * comes from the LATEST snapshot's committed DDL (never footer
   * inference); files written before a column existed read it as null.
-  * Supported leaf types: long/int/double/float/string/boolean plus
-  * DATE, TIMESTAMP (INT64 millis/micros/nanos and legacy INT96) and
-  * DECIMAL — the reference's data model is date/timestamp-first
-  * (`v3:139-179` ISO date keys), so a Transactions-shaped table rides
-  * the stream without casting. The table KEY stays integral (the
-  * format's zone/bloom machinery is long-keyed). */
+  * Files are read by the catalog scan's vectorized reader
+  * ([[GraftSqlColumnarReader]]), so every type Spark's parquet reader
+  * takes rides the stream — DATE, TIMESTAMP and DECIMAL included (the
+  * reference's data model is date/timestamp-first, `v3:139-179` ISO
+  * date keys). The table KEY stays integral (the format's zone/bloom
+  * machinery is long-keyed). */
 class TableChangesV2 extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
   override def shortName(): String = "graft-table-changes"
@@ -333,8 +333,10 @@ private[v2] class ChangesStream(root: String, schema: StructType,
     val mapping = TableFormat.snapshot(spark, root).props.filter { case (k, _) =>
       k.startsWith("colmap.") || k.startsWith("colborn.")
     }
-    new ParquetRowReaderFactory(schema,
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf()), mapping)
+    val data = StructType(schema.fields.filterNot(_.name == TableChangesV2.VersionColumn))
+    val c = GraftSqlColumnar.scanConf(spark)
+    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, data.json)
+    new ChangesReaderFactory(schema, data, new SerializableHadoopConf(c), mapping)
   }
 
   override def commit(end: Offset): Unit = ()
@@ -360,355 +362,29 @@ private[v2] class SerializableHadoopConf(
   }
 }
 
-private class ParquetRowReaderFactory(schema: StructType,
-                                      conf: SerializableHadoopConf,
-                                      mapping: Map[String, String] = Map.empty)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+/** Reads an appended file through [[GraftSqlColumnarReader]], with
+  * `_commit_version` as a per-partition constant column. */
+private class ChangesReaderFactory(schema: StructType, data: StructType,
+                                   conf: SerializableHadoopConf,
+                                   mapping: Map[String, String])
+    extends GraftColumnarReaderFactory {
+  override def createColumnarReader(partition: InputPartition)
+      : PartitionReader[ColumnarBatch] = {
     val p = partition.asInstanceOf[TableFilePartition]
     // a file emitted at version v was written under the names live at
-    // v: resolve the requested schema into that era (identity when no
-    // ledger; output is positional, synth columns are never mapped)
-    val physSchema =
-      if (mapping.isEmpty) schema
-      else TableFormat.physicalSchemaOf(mapping, schema, p.version)
-    new ParquetRowReader(p.file, physSchema, conf.value,
-      synth = Map(TableChangesV2.VersionColumn -> p.version))
-  }
-}
-
-private[v2] object ParquetRowReader {
-  /** Drain one long-typed column of a parquet file into a hash set —
-    * how a reader task loads the delete manifests that apply to its
-    * file (memory O(manifest keys); manifest compaction is the dial
-    * that bounds it). */
-  def readLongColumn(file: String, column: String,
-                     conf: org.apache.hadoop.conf.Configuration)
-      : java.util.HashSet[java.lang.Long] = {
-    val out = new java.util.HashSet[java.lang.Long]()
-    // NEVER let a scan's stamped row-group predicate reach a manifest
-    // read: a data-column filter would drop `_del_key` row groups and
-    // the emptied mask would resurrect deleted rows
+    // v: an old-era file reads through that era's physical schema, in a
+    // per-file conf (output stays positional)
+    val phys =
+      if (mapping.isEmpty) data
+      else TableFormat.physicalSchemaOf(mapping, data, p.version)
     val c =
-      if (GraftRowGroupFilter.hasFilter(conf)) GraftRowGroupFilter.without(conf)
-      else conf
-    val r = new ParquetRowReader(file,
-      StructType(Seq(StructField(column, LongType))), c)
-    try while (r.next()) out.add(r.get().getLong(0))
-    finally r.close()
-    out
-  }
-}
-
-/** Executor-side parquet → InternalRow reader over the parquet Group
-  * API (parquet-column ships with Spark). Columns are resolved BY NAME
-  * against the file's own schema — a file written before a column
-  * existed yields null for it (the format's evolution contract).
-  * `synth` columns (e.g. `_commit_version`) are synthesized per row;
-  * `mask`+`keyCol` apply a merge-on-read delete set — masked rows are
-  * skipped during the scan, before Spark sees them. */
-private[v2] class ParquetRowReader(file: String, schema: StructType,
-                                   conf: org.apache.hadoop.conf.Configuration,
-                                   synth: Map[String, Any] = Map.empty,
-                                   mask: java.util.HashSet[java.lang.Long] = null,
-                                   keyCol: String = null,
-                                   posMask: org.roaringbitmap.longlong.Roaring64Bitmap = null,
-                                   posCol: String = null)
-    extends PartitionReader[InternalRow] {
-  // `posMask` is a DELETION VECTOR of file-absolute row ordinals, and
-  // `posCol` names a schema field synthesized AS the row's ordinal (the
-  // `_pos` metadata column delta-based row-level ops anchor on). Both
-  // need the sequential ordinal count, so the caller must hand a
-  // FILTER-FREE conf with either (the factories do): a stamped
-  // row-group predicate would skip groups and desynchronize it.
-  require((posMask == null && posCol == null) ||
-    !GraftRowGroupFilter.hasFilter(conf),
-    s"parquet-row-reader: file-absolute ordinals need an unfiltered read of $file")
-  import org.apache.parquet.example.data.Group
-  import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-  import org.apache.parquet.hadoop.ParquetFileReader
-  import org.apache.parquet.hadoop.util.HadoopInputFile
-  import org.apache.parquet.io.ColumnIOFactory
-
-  // open through HadoopReadOptions so a row-group FilterPredicate the
-  // scan stamped on the conf applies at open (stats-level skipping of
-  // non-matching row groups — the masked MoR path gets the same IO
-  // savings as the vectorized path); a foreign file whose physical type
-  // rejects the typed predicate falls back to an unfiltered open
-  private val reader = {
-    val path = new org.apache.hadoop.fs.Path(file)
-    def open(c: org.apache.hadoop.conf.Configuration) =
-      ParquetFileReader.open(HadoopInputFile.fromPath(path, c),
-        org.apache.parquet.HadoopReadOptions.builder(c, path).build())
-    try open(conf)
-    catch {
-      case _: IllegalArgumentException if GraftRowGroupFilter.hasFilter(conf) =>
-        open(GraftRowGroupFilter.without(conf))
-    }
-  }
-  private val fileSchema = reader.getFooter.getFileMetaData.getSchema
-  private val columnIO = new ColumnIOFactory().getColumnIO(fileSchema)
-
-  /** Leaf converter resolved ONCE per field against the file's own
-    * parquet type (not per row), reading repetition `idx` of `name` in
-    * its parent group (idx > 0 only for legacy 2-level repeated leafs):
-    * primitives map directly; DATE is the parquet INT32 day count
-    * (= Spark's internal representation); TIMESTAMP handles INT64
-    * MILLIS/MICROS/NANOS and legacy INT96 (julian day + nanos-of-day),
-    * normalized to Spark's micros; DECIMAL handles the INT32/INT64/
-    * binary physical encodings at the declared scale. */
-  private def leafConverter(prim: org.apache.parquet.schema.PrimitiveType,
-                            name: String, dt: DataType): (Group, Int) => Any = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    dt match {
-      // type-widened columns read files written BEFORE the widen: the
-      // converter resolves against the file's own physical type, so an
-      // INT32-era file up-converts under a BIGINT schema (FLOAT under
-      // DOUBLE) — the read half of safe widening
-      case LongType => prim.getPrimitiveTypeName match {
-        case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
-          (g, i) => g.getInteger(name, i).toLong
-        case _ => (g, i) => g.getLong(name, i)
+      if (phys.fieldNames.sameElements(data.fieldNames)) conf.value
+      else {
+        val c2 = new org.apache.hadoop.conf.Configuration(conf.value)
+        c2.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, phys.json)
+        c2
       }
-      case IntegerType => (g, i) => g.getInteger(name, i)
-      case DoubleType => prim.getPrimitiveTypeName match {
-        case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.FLOAT =>
-          (g, i) => g.getFloat(name, i).toDouble
-        case _ => (g, i) => g.getDouble(name, i)
-      }
-      case FloatType => (g, i) => g.getFloat(name, i)
-      case BooleanType => (g, i) => g.getBoolean(name, i)
-      case StringType => (g, i) => UTF8String.fromString(g.getString(name, i))
-      case BinaryType => (g, i) => g.getBinary(name, i).getBytes
-      case DateType => (g, i) => g.getInteger(name, i) // INT32 days since epoch
-      case TimestampType => prim.getPrimitiveTypeName match {
-        case PrimitiveTypeName.INT96 => (g, i) => {
-          // legacy INT96: 8 bytes little-endian nanos-of-day + 4 bytes
-          // little-endian julian day (2440588 = 1970-01-01)
-          val bb = g.getInt96(name, i).toByteBuffer
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val nanosOfDay = bb.getLong; val julianDay = bb.getInt
-          (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-        }
-        case PrimitiveTypeName.INT64 =>
-          val unit = prim.getLogicalTypeAnnotation match {
-            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-              t.getUnit
-            case _ => LogicalTypeAnnotation.TimeUnit.MICROS
-          }
-          unit match {
-            case LogicalTypeAnnotation.TimeUnit.MILLIS =>
-              (g, i) => g.getLong(name, i) * 1000L
-            case LogicalTypeAnnotation.TimeUnit.NANOS =>
-              (g, i) => g.getLong(name, i) / 1000L
-            case _ => (g, i) => g.getLong(name, i) // micros: Spark's own unit
-          }
-        case t => throw new UnsupportedOperationException(
-          s"parquet-row-reader: timestamp column $name stored as $t")
-      }
-      case d: DecimalType => prim.getPrimitiveTypeName match {
-        case PrimitiveTypeName.INT32 =>
-          (g, i) => Decimal(g.getInteger(name, i).toLong, d.precision, d.scale)
-        case PrimitiveTypeName.INT64 =>
-          (g, i) => Decimal(g.getLong(name, i), d.precision, d.scale)
-        case PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY | PrimitiveTypeName.BINARY =>
-          (g, i) => {
-            val unscaled = new java.math.BigInteger(g.getBinary(name, i).getBytes)
-            Decimal(BigDecimal(new java.math.BigDecimal(unscaled, d.scale)),
-              d.precision, d.scale)
-          }
-        case t => throw new UnsupportedOperationException(
-          s"parquet-row-reader: decimal column $name stored as $t")
-      }
-      case dt => throw new UnsupportedOperationException(
-        s"parquet-row-reader: unsupported leaf type ${dt.simpleString} " +
-          s"for column $name (supported: long/int/double/float/string/" +
-          "boolean/date/timestamp/decimal/binary, ARRAY, STRUCT, MAP)")
-    }
+    new GraftSqlColumnarReader(p.file, schema, data, null, null, c,
+      constants = Map(TableChangesV2.VersionColumn -> p.version))
   }
-
-  /** Extractor for `f` inside a group of parquet type `gt` — the
-    * recursive spine that makes NESTED columns (struct groups, LIST
-    * arrays, arrays of structs) first-class through the custom reader:
-    *   - a field the file lacks reads as null at EVERY level (the same
-    *     add-only evolution contract as flat columns — a struct widened
-    *     with a new member back-fills it inside old rows);
-    *   - STRUCT maps to its parquet group, each member resolved by name;
-    *   - ARRAY handles the standard 3-level LIST encoding (`repeated
-    *     group list { optional element }` — what Spark and the catalog
-    *     writer emit), plus the legacy 2-level repeated-leaf and
-    *     repeated-struct forms, detected from the file's own schema the
-    *     way Spark's ParquetSchemaConverter does. */
-  private def fieldExtractor(gt: org.apache.parquet.schema.GroupType,
-                             f: StructField): Group => Any = {
-    val name = f.name
-    if (!gt.containsField(name)) return (_: Group) => null
-    val ftype = gt.getType(gt.getFieldIndex(name))
-    f.dataType match {
-      case st: StructType =>
-        val sub = ftype.asGroupType()
-        val members = st.fields.map(sf => fieldExtractor(sub, sf))
-        g => if (g.getFieldRepetitionCount(name) == 0) null
-          else {
-            val sg = g.getGroup(name, 0)
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              members.map(_(sg)): Array[Any])
-          }
-      case ArrayType(et, _) =>
-        val lst = ftype.asGroupType()
-        require(lst.getFieldCount == 1,
-          s"parquet-row-reader: list group $name has ${lst.getFieldCount} fields")
-        val repName = lst.getFieldName(0)
-        val repType = lst.getType(0)
-        // element read strategy, decided once from the FILE's encoding
-        val readElem: (Group, Int) => Any =
-          if (repType.isPrimitive) {
-            // legacy 2-level: repeated leaf directly under the list group
-            val conv = leafConverter(repType.asPrimitiveType(), repName, et)
-            (lg, j) => conv(lg, j)
-          } else {
-            val repGroup = repType.asGroupType()
-            // parquet's documented LIST backward-compat rule (mirrored by
-            // Spark's ParquetSchemaConverter.isElementType): the repeated
-            // group IS the element when it has multiple fields, or is
-            // named "array", or carries the list group's name + "_tuple"
-            // (legacy Avro/Thrift writers); ONLY otherwise is it the
-            // standard 3-level element holder. Keying off the inner
-            // field being named "element" would misparse a legacy
-            // 2-level struct element that happens to have a single
-            // member called "element".
-            val isElementHolder = !(repGroup.getFieldCount > 1 ||
-              repName == "array" || repName == s"${name}_tuple")
-            if (isElementHolder) {
-              // standard 3-level: repeated holder wraps one optional element
-              val elemField = StructField(repGroup.getFieldName(0), et)
-              val conv = fieldExtractor(repGroup, elemField)
-              (lg, j) => conv(lg.getGroup(repName, j))
-            } else {
-              // legacy 2-level repeated STRUCT: the repeated group IS the element
-              val est = et match {
-                case s: StructType => s
-                case other => throw new UnsupportedOperationException(
-                  s"parquet-row-reader: repeated group $repName read as " +
-                    s"${other.simpleString}")
-              }
-              val members = est.fields.map(sf => fieldExtractor(repGroup, sf))
-              (lg, j) => {
-                val eg = lg.getGroup(repName, j)
-                new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-                  members.map(_(eg)): Array[Any])
-              }
-            }
-          }
-        g => if (g.getFieldRepetitionCount(name) == 0) null
-          else {
-            val lg = g.getGroup(name, 0)
-            val n = lg.getFieldRepetitionCount(repName)
-            val out = new Array[Any](n)
-            var j = 0
-            while (j < n) { out(j) = readElem(lg, j); j += 1 }
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-          }
-      case MapType(kt, vt, _) =>
-        // standard MAP encoding: repeated key_value group of (key, value)
-        // — the repeated-group name is taken from the file ("key_value",
-        // legacy "map")
-        val mapG = ftype.asGroupType()
-        require(mapG.getFieldCount == 1,
-          s"parquet-row-reader: map group $name has ${mapG.getFieldCount} fields")
-        val repName = mapG.getFieldName(0)
-        val kvType = mapG.getType(0).asGroupType()
-        val keyConv = fieldExtractor(kvType,
-          StructField(kvType.getFieldName(0), kt))
-        val valConv = fieldExtractor(kvType,
-          StructField(kvType.getFieldName(1), vt))
-        g => if (g.getFieldRepetitionCount(name) == 0) null
-          else {
-            val mg = g.getGroup(name, 0)
-            val n = mg.getFieldRepetitionCount(repName)
-            val keys = new Array[Any](n)
-            val vals = new Array[Any](n)
-            var j = 0
-            while (j < n) {
-              val kv = mg.getGroup(repName, j)
-              keys(j) = keyConv(kv)
-              vals(j) = valConv(kv)
-              j += 1
-            }
-            new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(keys),
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(vals))
-          }
-      case _ =>
-        val conv = leafConverter(ftype.asPrimitiveType(), name, f.dataType)
-        g => if (g.getFieldRepetitionCount(name) == 0) null else conv(g, 0)
-    }
-  }
-
-  // per-field extractors resolved once: synth columns, schema-evolution
-  // nulls for fields the file predates, and typed (nested) conversion
-  private val extractors: Array[Group => Any] = schema.fields.map { f =>
-    if (synth.contains(f.name)) { val v = synth(f.name); (_: Group) => v }
-    else fieldExtractor(fileSchema, f)
-  }
-  // schema slot synthesized per row as the file-absolute ordinal
-  private val posIdx: Int =
-    if (posCol == null) -1 else schema.fieldIndex(posCol)
-
-  private var recordReader: org.apache.parquet.io.RecordReader[Group] = _
-  private var rowsLeftInGroup = 0L
-  private var current: InternalRow = _
-
-  private def advanceRowGroup(): Boolean = {
-    val pages = reader.readNextRowGroup()
-    if (pages == null) false
-    else {
-      recordReader = columnIO.getRecordReader(pages,
-        new GroupRecordConverter(fileSchema))
-      rowsLeftInGroup = pages.getRowCount
-      if (rowsLeftInGroup == 0) advanceRowGroup() else true
-    }
-  }
-
-  /** The row's key for mask probing, or null for a NULL key — delete
-    * manifests never hold nulls (the writers filter them), so a
-    * null-key row is never masked (and must not NPE the scan). */
-  private def keyOf(g: Group): java.lang.Long =
-    if (g.getFieldRepetitionCount(keyCol) == 0) null
-    else fileSchema.getType(fileSchema.getFieldIndex(keyCol))
-      .asPrimitiveType().getPrimitiveTypeName match {
-      case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64 =>
-        g.getLong(keyCol, 0)
-      case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
-        g.getInteger(keyCol, 0).toLong
-      case t => throw new UnsupportedOperationException(
-        s"parquet-row-reader: non-integral key column $keyCol ($t)")
-    }
-
-  // file-absolute row ordinal of the NEXT record (valid because a
-  // posMask read never skips row groups — see the constructor guard)
-  private var pos = -1L
-
-  override def next(): Boolean = {
-    while (true) {
-      if (rowsLeftInGroup == 0 && !advanceRowGroup()) return false
-      val g = recordReader.read()
-      rowsLeftInGroup -= 1
-      pos += 1
-      if ((posMask == null || !posMask.contains(pos)) &&
-          (mask == null || { val k = keyOf(g); k == null || !mask.contains(k) })) {
-        val vals = new Array[Any](extractors.length)
-        var i = 0
-        while (i < extractors.length) { vals(i) = extractors(i)(g); i += 1 }
-        if (posIdx >= 0) vals(posIdx) = pos
-        current = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-        return true
-      }
-    }
-    false
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
 }

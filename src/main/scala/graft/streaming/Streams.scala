@@ -500,12 +500,18 @@ object Streams {
       if (streamWritten && storedLineage != lineage)
         requireSameLineage("foreachBatchTableAppend", root, storedLineage, lineage)
       val lastBatch = cur.flatMap(_.props.get("batch_id")).map(_.toLong).getOrElse(-1L)
-      if (batchId > lastBatch && !batch.isEmpty) {
+      if (batchId > lastBatch) {
         val gate = Map("batch_id" -> batchId.toString, "lineage" -> lineage)
         val out = s"$dataDir/append-$batchId-${java.util.UUID.randomUUID().toString}"
         batch.write.mode("overwrite").parquet(out)
         val files = TableFormat.listParquet(spark, out)
-        if (cur.isDefined)
+        // emptiness from the written footers, on the driver (a
+        // `batch.isEmpty` probe would run the batch's plan a second
+        // time): an empty batch commits nothing and leaves no files
+        if (Parquet.rowCount(spark, files) == 0L) {
+          val (fs, outP) = hadoopFs(spark, out)
+          fs.delete(outP, true)
+        } else if (cur.isDefined)
           // the shared ingest commit: schema evolves add-only with the
           // batch, bloom geometry inherited from the table, gate overlaid
           TableFormat.appendFiles(spark, root, files, extraProps = gate)
@@ -813,43 +819,6 @@ object Streams {
     (bases, batches)
   }
 
-  /** Consolidate a dedup sink's committed batch-versioned state — the
-    * maintenance half of the ingest story. Every committed micro-batch
-    * appends its own `b<id>` dir, so a long-lived stream accumulates one
-    * dir (and >= one file per touched partition) PER BATCH: reads stay
-    * partition-pruned, but listing cost, open-file count, and the
-    * per-dir union in [[embeddingCorpus]] all grow O(batches) — the
-    * streaming twin of the small-files problem [[graft.operators.Layout.compact]]
-    * fixes for tables. This rewrites the live state of each kind
-    * (`vectors`/`corpus`/`sets`/`bands`/`hashes`, whichever exist) into
-    * ONE `base.<last>` dir with the same partitioning (repartitioned to
-    * one file per partition) and retires the merged dirs, so steady-state
-    * reads touch one consolidated dir plus the batches since the last
-    * compaction.
-    *
-    * Crash-safe without touching the commit protocol: the merge lands in
-    * a dot-staging dir (invisible — readers match only `base.<n>`/`b<n>`),
-    * is RENAMED to `base.<last>` (one atomic publish per kind), and only
-    * then are superseded dirs deleted. A crash before the rename leaves
-    * garbage staging to overwrite on retry; a crash after it leaves
-    * superseded dirs that every reader already ignores (their ids are
-    * <= the new base's upTo) and that the next compaction's hygiene pass
-    * removes. Concurrent ingest is safe: batches land at ids > `last`,
-    * which the merge never touches. Run it from the maintenance cadence
-    * (or `foreachBatch` every N batches), single compactor at a time —
-    * the same single-writer assumption the sinks themselves carry. */
-  /** Wrap a dedup-sink `foreachBatch` function with a periodic
-    * [[compactDedupState]] cadence: after every batch whose id is a
-    * multiple of `every`, the sink's stored state is consolidated —
-    * bounding dir growth to O(every) without a separate maintenance
-    * scheduler. Compaction runs AFTER the batch commits (it only ever
-    * touches committed ids), and an uncommitted batch (replay-skip, zero
-    * survivors) still triggers the hygiene pass — which is idempotent and
-    * cheap when there is nothing to merge. Cadence choice is the usual
-    * LSM trade: small `every` keeps reads near one dir but rewrites the
-    * corpus more often (write amplification ~ corpus/every batches);
-    * production cadences are driven by dir count or bytes, which a caller
-    * can implement directly with [[compactDedupState]]. */
   /** Sink-side continuous Count-Min maintenance — the streaming form of
     * [[graft.operators.Sketches]]: each micro-batch's occurrence rows
     * become a bounded (depth x width) DELTA sketch appended as
@@ -922,6 +891,18 @@ object Streams {
     }
   }
 
+  /** Wrap a dedup-sink `foreachBatch` function with a periodic
+    * [[compactDedupState]] cadence: after every batch whose id is a
+    * multiple of `every`, the sink's stored state is consolidated —
+    * bounding dir growth to O(every) without a separate maintenance
+    * scheduler. Compaction runs AFTER the batch commits (it only ever
+    * touches committed ids), and an uncommitted batch (replay-skip, zero
+    * survivors) still triggers the hygiene pass — which is idempotent and
+    * cheap when there is nothing to merge. Cadence choice is the usual
+    * LSM trade: small `every` keeps reads near one dir but rewrites the
+    * corpus more often (write amplification ~ corpus/every batches);
+    * production cadences are driven by dir count or bytes, which a caller
+    * can implement directly with [[compactDedupState]]. */
   def withPeriodicCompaction(sink: (DataFrame, Long) => Unit, root: String,
                              every: Int = 16): (DataFrame, Long) => Unit = {
     require(every >= 1, s"withPeriodicCompaction: every must be >= 1, got $every")
@@ -931,6 +912,31 @@ object Streams {
     }
   }
 
+  /** Consolidate a dedup sink's committed batch-versioned state — the
+    * maintenance half of the ingest story. Every committed micro-batch
+    * appends its own `b<id>` dir, so a long-lived stream accumulates one
+    * dir (and >= one file per touched partition) PER BATCH: reads stay
+    * partition-pruned, but listing cost, open-file count, and the
+    * per-dir union in [[embeddingCorpus]] all grow O(batches) — the
+    * streaming twin of the small-files problem [[graft.operators.Layout.compact]]
+    * fixes for tables. This rewrites the live state of each kind
+    * (`vectors`/`corpus`/`sets`/`bands`/`hashes`, whichever exist) into
+    * ONE `base.<last>` dir with the same partitioning (repartitioned to
+    * one file per partition) and retires the merged dirs, so steady-state
+    * reads touch one consolidated dir plus the batches since the last
+    * compaction.
+    *
+    * Crash-safe without touching the commit protocol: the merge lands in
+    * a dot-staging dir (invisible — readers match only `base.<n>`/`b<n>`),
+    * is RENAMED to `base.<last>` (one atomic publish per kind), and only
+    * then are superseded dirs deleted. A crash before the rename leaves
+    * garbage staging to overwrite on retry; a crash after it leaves
+    * superseded dirs that every reader already ignores (their ids are
+    * <= the new base's upTo) and that the next compaction's hygiene pass
+    * removes. Concurrent ingest is safe: batches land at ids > `last`,
+    * which the merge never touches. Run it from the maintenance cadence
+    * (or `foreachBatch` every N batches), single compactor at a time —
+    * the same single-writer assumption the sinks themselves carry. */
   def compactDedupState(spark: SparkSession, root: String): Unit = {
     val (fs, rootP) = hadoopFs(spark, root)
     val last = lastCommittedBatch(fs, rootP)
@@ -1262,6 +1268,6 @@ object Streams {
       // a replayed batch id is harmless — the swap just guarantees readers
       // never see a half-written target and a crash never loses it)
       publishAtomic(spark, targetPath, merged, batchId)
-      ctl.advance(Instant.now(), batchWasEmpty = batch.isEmpty)
+      ctl.advance(Instant.now())
     }
 }

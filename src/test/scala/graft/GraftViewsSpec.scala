@@ -170,6 +170,7 @@ class GraftViewsSpec extends SparkTestBase {
     assert(cat.viewExists(id))
     val v = cat.loadView(id)
     assert(v.query() == "SELECT k FROM vcat.t")
+    assert(v.name() == "api_v")
     assert(v.schema().fieldNames.toSeq == Seq("k"))
     cat.alterView(id, ViewChange.setProperty("owner_team", "data"))
     assert(cat.loadView(id).properties().get("owner_team") == "data")

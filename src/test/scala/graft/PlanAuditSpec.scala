@@ -105,9 +105,26 @@ class PlanAuditSpec extends SparkTestBase {
     * global windows over data-scale frames */
   private val unpartitionedWindowOk = Set("q76_skyline")
 
+  /** Each entry built ONCE for both tests (building runs its eager
+    * setup): its executed-plan string and the windows with an empty
+    * partition spec in its optimized logical plan. */
+  private lazy val audited: Seq[(String, String, Seq[String])] =
+    SparkEntry.queries.toSeq.map { case (name, fn) =>
+      val qe = fn(spark, sfDir).queryExecution
+      // checked on the optimized logical plan: EliminateWindowPartitions
+      // has already dropped foldable keys there, so a partition spec that
+      // survives only as literals (the r02 q16 regression) shows up as
+      // empty
+      val windows = qe.optimizedPlan.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window
+            if w.partitionSpec.isEmpty =>
+          s"$name: Window with empty partition spec (${w.windowExpressions.map(_.name).mkString(",")})"
+      }
+      (name, qe.executedPlan.toString, windows)
+    }
+
   test("no entry plans a cartesian; NLJ/SMJ only on the allowlists") {
-    val violations = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
+    val violations = audited.flatMap { case (name, plan, _) =>
       Seq(
         if (plan.contains("CartesianProduct")) Some(s"$name: CartesianProduct") else None,
         if (plan.contains("BroadcastNestedLoopJoin") && !oneRowBroadcastOk(name))
@@ -120,16 +137,8 @@ class PlanAuditSpec extends SparkTestBase {
   }
 
   test("no entry plans an unpartitioned window (single-partition sort)") {
-    // checked on the optimized logical plan: EliminateWindowPartitions has
-    // already dropped foldable keys there, so a partition spec that survives
-    // only as literals (the r02 q16 regression) shows up as empty
-    val violations = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      if (unpartitionedWindowOk(name)) Seq.empty
-      else fn(spark, sfDir).queryExecution.optimizedPlan.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window
-            if w.partitionSpec.isEmpty =>
-          s"$name: Window with empty partition spec (${w.windowExpressions.map(_.name).mkString(",")})"
-      }
+    val violations = audited.flatMap { case (name, _, windows) =>
+      if (unpartitionedWindowOk(name)) Seq.empty else windows
     }
     assert(violations.isEmpty, violations.mkString("\n"))
   }

@@ -559,6 +559,38 @@ class StreamingSpec extends SparkTestBase {
     assert(e.getMessage.contains("lineage"))
   }
 
+  test("foreachBatchTableAppend: an empty batch commits nothing and leaves no " +
+      "files; an append runs the batch's plan once") {
+    import graft.operators.TableFormat
+    import org.apache.spark.graft.JobCount
+    val dir = java.nio.file.Files.createTempDirectory("graft_tf_empty").toString
+    val (root, data) = (s"$dir/t", s"$dir/d")
+    val fn = Streams.foreachBatchTableAppend(root, data, "k",
+      numBits = 256, numHashes = 3, lineage = "ckpt-E")
+    def batch(from: Long, until: Long) = spark.range(from, until)
+      .selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
+    def appendDirs() = Option(new java.io.File(data).list()).toSeq.flatten
+      .filter(_.startsWith("append-")).sorted
+    // an empty first batch: no table, no files
+    fn(batch(0, 0), 0L)
+    assert(TableFormat.versions(spark, root).isEmpty)
+    assert(appendDirs().isEmpty)
+    fn(batch(0, 3), 1L)
+    assert(TableFormat.versions(spark, root) == Seq(1L))
+    val committed = appendDirs()
+    assert(committed.size == 1)
+    // an empty batch after a commit: no new version, no leftover dir
+    fn(batch(0, 0), 2L)
+    assert(TableFormat.versions(spark, root) == Seq(1L))
+    assert(appendDirs() == committed)
+    // one append: the write (1) and the append commit (2); a separate
+    // `batch.isEmpty` probe made it 4
+    assert(JobCount(spark.sparkContext)(fn(batch(3, 5), 3L)) == 3)
+    assert(TableFormat.versions(spark, root) == Seq(1L, 2L))
+    assert(TableFormat.read(spark, TableFormat.snapshot(spark, root))
+      .select("k").as[Long].collect().sorted.toSeq == Seq(0L, 1L, 2L, 3L, 4L))
+  }
+
   test("foreachBatchTableUpsertMoR: O(batch) CDC apply, replay gate, latest-per-key") {
     import graft.operators.TableFormat
     val dir = java.nio.file.Files.createTempDirectory("graft_tf_morup").toString

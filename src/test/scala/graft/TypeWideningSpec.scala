@@ -65,20 +65,29 @@ class TypeWideningSpec extends SparkTestBase {
 
 }
 
-/** The custom row reader's up-conversion half lives in `graft.sources.v2`
-  * (ParquetRowReader is package-private); [[graft.sources.v2.WideningTestBridge]]
-  * exposes a read-all shim for this spec. */
+/** The read half of widening on the `graft-table-changes` stream: files
+  * written before [[TableFormat.widenColumnType]] stream under the wide
+  * committed schema. */
 class TypeWideningReaderSpec extends SparkTestBase {
-  test("the custom row reader up-converts INT32 under BIGINT and FLOAT " +
-      "under DOUBLE (widened-era files through the non-vectorized path)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_twr").toString
-    spark.range(5).selectExpr("CAST(id AS INT) AS k", "CAST(id AS FLOAT) AS f")
+  test("the graft-table-changes stream up-converts INT32 under BIGINT and " +
+      "FLOAT under DOUBLE (files written before the widen)") {
+    def tmp() = java.nio.file.Files.createTempDirectory("graft_twr").toString
+    val root = tmp()
+    spark.range(5).selectExpr("id AS id", "CAST(id AS INT) AS k",
+        "CAST(id AS FLOAT) AS f")
       .repartition(1).write.mode("overwrite").parquet(s"$root/d0")
-    val file = TableFormat.listParquet(spark, s"$root/d0").head
-    val out = graft.sources.v2.WideningTestBridge.readAll(file,
-      StructType.fromDDL("k BIGINT, f DOUBLE"),
-      spark.sessionState.newHadoopConf())
+    TableFormat.commitFiles(spark, root, "id",
+      TableFormat.listParquet(spark, s"$root/d0"), 1 << 12, 5)
+    TableFormat.widenColumnType(spark, root, "k", LongType)
+    TableFormat.widenColumnType(spark, root, "f", DoubleType)
+    val out = s"${tmp()}/out"
+    val q = spark.readStream.format("graft-table-changes").load(root)
+      .writeStream.format("parquet")
+      .option("path", out).option("checkpointLocation", s"${tmp()}/cp")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(120000), "stream did not finish")
+    val got = spark.read.parquet(out).select("k", "f").collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
-    assert(out.sorted == (0 until 5).map(i => (i.toLong, i.toDouble)))
+    assert(got.sorted.toSeq == (0 until 5).map(i => (i.toLong, i.toDouble)))
   }
 }

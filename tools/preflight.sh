@@ -29,6 +29,14 @@ if grep -rnE 'v%020d|Rename\.OVERWRITE|\.tmp"' src/main --include='*.scala' \
   echo "PREFLIGHT FAIL: commit-log protocol copied outside CommitLog.scala (lines above)"; exit 1
 fi
 
+echo "== preflight: one parquet read path =="
+# every connector parquet read goes through Spark's vectorized reader
+# (GraftSqlColumnarReader); a second, hand-written decoder over parquet's
+# record-assembly API must not come back
+if grep -rnE 'GroupRecordConverter|ColumnIOFactory|readNextRowGroup' src/main --include='*.scala'; then
+  echo "PREFLIGHT FAIL: hand-written parquet row decoder in src/main (lines above)"; exit 1
+fi
+
 echo "== preflight: full Verify at $SF_VERIFY =="
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify $SF_VERIFY $OUT" 2>&1 \
